@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from bigdata_riveranalysis_spark import sizing
 from bigdata_riveranalysis_spark.functions import exact as EX
 from bigdata_riveranalysis_spark.functions import text as TX
 from bigdata_riveranalysis_spark.functions import vectors as VX
@@ -3764,22 +3765,20 @@ def kmeans_int8_lloyd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector, the strongest checkable granularity.
 
     r17 (VERDICT r16 #2, guide §2.2): the staging table is coalesced
-    to a ROW-DERIVED partition count before the checkpoint —
-    ceil(n_vecs / 512), never a cores number. The Lloyd chain reads X
-    in every one of its ~8 AQE stages, and at bench SF the inherited
-    cores-derived spread (32 partitions for 2,000 vectors) made each
-    of those stages 32 tasks of ~60 rows: pure per-task overhead that
-    GREW with core count (the measured 8-core/32-core ratio was 0.74
-    — more cores, slower). coalesce is a narrow dependency (no
-    exchange), and at real scale ceil(n/512) exceeds any scan's
-    partition count long before 1 GB of codes, making it a no-op
-    there. Measured (sf0.1, local[32], interleaved min-of-3):
-    1.795 -> 1.313 s, assignments identical.
+    to a ROW-DERIVED partition count before the checkpoint
+    (``sizing.partitions("kmeans_stage")``), never a cores number. The
+    Lloyd chain reads X in every one of its ~8 AQE stages, and at
+    bench SF the inherited cores-derived spread (32 partitions for
+    2,000 vectors) made each of those stages 32 tasks of ~60 rows:
+    pure per-task overhead that GREW with core count. coalesce is a
+    narrow dependency (no exchange), and at real scale the row-derived
+    count exceeds any scan's partition count long before 1 GB of
+    codes, making it a no-op there.
     """
     n_vecs = table_rowcount(sf_dir, "embeddings")
     X = (
         _sq8_codes_array(spark, sf_dir)
-        .coalesce(max(1, -(-n_vecs // 512)))
+        .coalesce(sizing.partitions("kmeans_stage", rows=n_vecs))
         .localCheckpoint()
     )
     wseed = W.orderBy("vec_id")  # bounded input: k rows after limit

@@ -48,36 +48,19 @@ exactly like a persisted index would be.
 
 from __future__ import annotations
 
+import logging as _logging
 import os as _os
 import threading as _threading
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
+
+from bigdata_riveranalysis_spark import sizing
+
+_LOG = _logging.getLogger(__name__)
 
 #: (applicationId, abspath(sf_dir), stage) → materialized frame.
 _INDEX_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-#: Right-sizing floor for staged artifacts (r17, guide §2.2/§6 —
-#: VERDICT r16 #2's negative-scaling root cause): a staged frame
-#: inherits its BUILD plan's partitioning (shuffle partitions, or a
-#: cores-derived spread), so a kilobyte-sized codebook/index landed in
-#: 32-64 partitions and every consumer scan paid 32-64 task overheads
-#: for microseconds of work — and MORE cores meant MORE tasks for the
-#: same bytes, which is exactly how four dense-family queries ran
-#: faster on 8 cores than 32. After materialization the frame's TRUE
-#: byte size is known (its checkpoint blocks are in the storage
-#: report), so frames whose partitions would average under
-#: _RIGHTSIZE_TARGET_BYTES are re-landed once at
-#: ceil(bytes / target) partitions. Scale-adaptive by construction:
-#: the target is a BYTES floor, not a cores number — a genuinely
-#: large staged artifact (bytes / 4 MiB >= its partition count) is
-#: never touched, and consumer parallelism for heavy operators comes
-#: from their own exchanges, not from the artifact scan. Frames at
-#: <= _RIGHTSIZE_MIN_PARTS partitions are left alone (nothing to
-#: win). Measured (sf0.1, local[32], interleaved min-of-3):
-#: ann_ivf_pq 1.156 -> 0.616 s with the PQ artifacts re-landed
-#: 32 -> 1-2 partitions; 8-vs-32-core ratios in OPTIMIZATION_r17.md.
-_RIGHTSIZE_TARGET_BYTES = 4 << 20
-_RIGHTSIZE_MIN_PARTS = 4
 
 #: Guards the memo dict and the per-key lock table ONLY — never held
 #: across a build. Each stage key gets its own reentrant lock (ADVICE
@@ -191,40 +174,36 @@ def _dir_parent(installed: str) -> str:
 
 
 def _rightsize(df: DataFrame) -> DataFrame:
-    """Re-land an over-partitioned SLIM staged frame at a byte-derived
-    partition count (see _RIGHTSIZE_TARGET_BYTES). No-op when the
-    frame is already at <= _RIGHTSIZE_MIN_PARTS partitions, when its
-    blocks aren't in the storage report (reliable-checkpoint durable
+    """Re-land an over-partitioned SLIM staged frame at the
+    ``sizing.partitions("staged")`` count for its block bytes. A
+    staged frame inherits its build plan's cores-derived partitioning;
+    after materialization its true byte size is in the storage report.
+    No-op when its blocks aren't there (reliable-checkpoint durable
     mode — partition counts there come from real cluster data sizes),
-    or when its bytes justify its partitioning. The one extra pass
-    reads the just-landed blocks once (slim by the staging contract)
-    and the superseded blocks are released immediately."""
+    and skipped with one log line when the py4j introspection fails.
+    The one extra pass reads the just-landed blocks once (slim by the
+    staging contract) and the superseded blocks are released."""
     try:
         jrdd = df._jdf.queryExecution().analyzed().rdd()
         n = jrdd.getNumPartitions()
-        if n <= _RIGHTSIZE_MIN_PARTS:
-            return df
-        rid = jrdd.id()
-        sc = df.sparkSession.sparkContext
-        info = next(
-            (
-                i
-                for i in sc._jsc.sc().getRDDStorageInfo()
-                if i.id() == rid
-            ),
-            None,
-        )
-        if info is None:
-            return df
-        nbytes = info.memSize() + info.diskSize()
-        target = max(1, -(-int(nbytes) // _RIGHTSIZE_TARGET_BYTES))
-        if target >= n:
-            return df
-        out = df.coalesce(target).localCheckpoint(eager=True)
-        jrdd.unpersist(False)
-        return out
-    except Exception:  # pragma: no cover - no JVM handle
+        nbytes = _stored_bytes(df, jrdd.id())
+    except (Py4JError, AttributeError) as e:
+        first = str(e).partition("\n")[0]
+        _LOG.warning("rightsize skipped: introspection failed: %s: %s", type(e).__name__, first)
         return df
+    target = n if nbytes is None else sizing.partitions("staged", nbytes=nbytes, current=n)
+    if target >= n:
+        return df
+    out = df.coalesce(target).localCheckpoint(eager=True)
+    jrdd.unpersist(False)
+    return out
+
+
+def _stored_bytes(df: DataFrame, rid: int) -> int | None:
+    """Memory + disk bytes of RDD ``rid``'s blocks, or None when the
+    storage report does not list it."""
+    infos = df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+    return next((int(i.memSize() + i.diskSize()) for i in infos if i.id() == rid), None)
 
 
 def stage(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:

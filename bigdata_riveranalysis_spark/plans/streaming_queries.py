@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigdata_riveranalysis_spark import sizing
 from bigdata_riveranalysis_spark.functions import exact as EX
 from bigdata_riveranalysis_spark.plans import mining as MN
 from bigdata_riveranalysis_spark.plans.registry import query
@@ -96,14 +97,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw
 
 
-def _stream_partitions(parallelism: int, python_stateful: bool) -> int:
-    """Shuffle/state-store partition count for one streaming query —
-    the per-operator-class sizing rule (r16; measurements in the
-    _run_stream comment below). Pure so the rule is pinned by
-    tests/test_r16_opt.py."""
-    return max(4, parallelism // (2 if python_stateful else 8))
-
-
 def _run_stream(
     df: DataFrame,
     spark: SparkSession,
@@ -115,16 +108,12 @@ def _run_stream(
     skip_no_data_batch: bool = False,
 ) -> DataFrame:
     # Stateful streaming pins one state-store instance per shuffle
-    # partition for the query's lifetime; each instance has per-batch
-    # maintenance cost, so partition count trades parallelism against
-    # per-store overhead. Measured on the bench corpus (~100k events,
-    # min-of-two): 64 parts 5× slower than 32; 16 → 7.2 s across the
-    # five stream queries, 8 → 5.3 s, 4 → 4.5 s — at this state volume
-    # the per-store fixed cost still dominates at 8, so the local
-    # sizing floors at 4. On a real cluster this number is sized to
-    # state volume (keys × window horizon ÷ target store size), not to
-    # a cores heuristic, and cannot change across restarts of the same
-    # checkpoint — which is why production pins it explicitly.
+    # partition for the query's lifetime; the count per operator class
+    # is ``sizing.partitions("state_jvm" | "state_python")``, derived
+    # from defaultParallelism so it follows the cores a run is given.
+    # Both it and the no-data-batch skip are set just for this
+    # query and restored after termination; a conf the query does not
+    # change is never read or written.
     # State-store PROVIDER (VERDICT r5 #6): measured A/B on the bench
     # corpus (sf0.1, ~100k events, 6 stream queries, warm runs of 3):
     # default HDFS-backed in-memory store 7.55-7.63 s total vs RocksDB
@@ -160,10 +149,9 @@ def _run_stream(
     # a new uuid-named MemorySink's rows on the driver per repetition
     # (unbounded session-lifetime growth; flagged in review).
     name = "stream_result_" + label
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
+    state_op = "state_python" if python_stateful else "state_jvm"
+    n_state = sizing.partitions(state_op, cores=spark.sparkContext.defaultParallelism)
+    overrides = {"spark.sql.shuffle.partitions": str(n_state)}
     if skip_no_data_batch:
         # r17 (VERDICT r16 #4, guide §2.4): an INNER stream-stream
         # join emits matches eagerly as both sides arrive, so the
@@ -176,37 +164,13 @@ def _run_stream(
         # tests/test_r17_opt.py). Inner-join drains ONLY: an OUTER
         # join emits its unmatched rows from exactly that batch, and
         # a continuous production stream keeps the default so state
-        # is evicted while the query lives. Conf is set just for this
-        # query's start and restored after termination.
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    # Per-OPERATOR-CLASS sizing (r16, guide §1.2/§2): the two stateful
-    # operator classes bottleneck on different resources, so one
-    # number cannot serve both.
-    #   * JVM stateful aggregates (windows, dedup, stream-stream
-    #     joins): per-store maintenance dominates at this state volume
-    #     — measured r5: 64 parts 5× slower than 32, 16 → 7.2 s over
-    #     five stream queries, 8 → 5.3, 4 → 4.5 → parallelism // 8.
-    #   * applyInPandasWithState operators (python_stateful=True): the
-    #     per-group PYTHON fold dominates and each shuffle partition
-    #     is exactly one Python worker, so the low count starves the
-    #     worker pool. Measured r16 (sf0.1, min-of-3+, warm):
-    #     session_fold_ttl 4.56 s @4 → 3.21 @8 → 2.32-2.81 @16 → 2.94
-    #     @32; feature_map 3.12 @4 → 1.35 @16; ewma 1.86 @4 → 1.21
-    #     @16; the JVM windowed aggregate CONTROL measured the
-    #     opposite (0.89 @4 → 1.68 @16) → parallelism // 2.
-    # Both derive from defaultParallelism (the driver re-benches at
-    # lower core counts), and on a real cluster both are pinned per
-    # query to state volume — and, for the Python class, to
-    # executor-Python parallelism — since the count can't change
-    # across restarts of one checkpoint.
-    spark.conf.set(
-        "spark.sql.shuffle.partitions",
-        str(
-            _stream_partitions(
-                spark.sparkContext.defaultParallelism, python_stateful
-            )
-        ),
-    )
+        # is evicted while the query lives.
+        overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    # None = not set in this session: restored by unset, so the
+    # default is never materialized as an explicit setting.
+    saved = {k: spark.conf.get(k, None) for k in overrides}
+    for k, v in overrides.items():
+        spark.conf.set(k, v)
     try:
         writer = (
             df.writeStream.format("memory")
@@ -228,10 +192,11 @@ def _run_stream(
             q.stop()
             raise TimeoutError(f"streaming query {name} exceeded 600s; partial sink discarded")
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
     return spark.table(name)
 
 

@@ -15,33 +15,22 @@ import os
 
 from pyspark.sql import SparkSession
 
+from bigdata_riveranalysis_spark import sizing
+
 # Local test parallelism; the driver harness sets SPARK_GRAFT_CPUS.
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
 
 def _default_shuffle_partitions() -> int:
-    """Input-derived initial shuffle-partition count (see get_spark's
-    scale notes): clamp(ceil(corpus bytes / 1 MiB), 4, 2× cores).
-    Footer metadata only — no Spark job, no scan; falls back to the
-    cores cap when the corpus dir is absent (non-bench sessions)."""
-    cap = max(int(_CPUS) * 2, 8)
+    """Initial shuffle-partition count from the footer bytes of the
+    corpus at ``SPARK_GRAFT_SF_DIR`` (``sizing`` class ``shuffle``) —
+    metadata only, no Spark job. A missing corpus sizes at bytes 0."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    try:
-        from bigdata_riveranalysis_spark.sources.tables import (
-            TABLES,
-            _footer_stats,
-        )
+    from bigdata_riveranalysis_spark.sources.tables import TABLES, _footer_stats
 
-        total = 0
-        for t in TABLES:
-            path = os.path.join(sf_dir, f"{t}.parquet")
-            if os.path.exists(path):
-                total += _footer_stats(path)[1]
-        if total <= 0:
-            return cap
-        return min(cap, max(4, -(-total // (1 << 20))))
-    except Exception:  # pragma: no cover - metadata unreadable
-        return cap
+    paths = (os.path.join(sf_dir, f"{t}.parquet") for t in TABLES)
+    total = sum(_footer_stats(p)[1] for p in paths if os.path.exists(p))
+    return sizing.partitions("shuffle", nbytes=total, cores=int(_CPUS))
 
 
 def get_spark(app_name: str = "bigdata_riveranalysis_spark", *, shuffle_partitions: int | None = None) -> SparkSession:
@@ -53,20 +42,16 @@ def get_spark(app_name: str = "bigdata_riveranalysis_spark", *, shuffle_partitio
         AQE is what keeps a static ``shuffle.partitions`` choice from
         being fatal — the initial number only needs to be an upper
         bound.
-      * ``shuffle.partitions`` derives from the CORPUS BYTES (r17,
-        guide §2.2 — VERDICT r16 #2): the initial count is an upper
-        bound AQE coalesces down from, so it is sized as
-        ceil(input bytes / 1 MiB) — AQE's own minPartitionSize, i.e.
-        "never plan more shuffle partitions than 1 MiB of input each
-        could fill" — clamped to [4, 2× cores]. The former flat
-        2×cores default made every tiny-shuffle stage pay a
-        cores-proportional number of per-task/bucket fixed costs,
-        which is measurably why four dense-family queries ran FASTER
-        at 8 cores than 32 (ratios 0.5-0.8; interleaved conf A/B at
-        32 cores: doc_surprisal 0.786→0.509, kmeans 1.467→1.218 at
-        64→16). More data → more partitions, until the cores cap; on
-        a 1000-executor cluster the count moves to spark-submit conf
-        near (total input bytes / 128 MiB), as before.
+      * ``shuffle.partitions`` derives from the CORPUS BYTES (r17):
+        the initial count is an upper bound AQE coalesces down from,
+        sized by ``sizing.partitions("shuffle")`` at
+        clamp(ceil(input bytes / 1 MiB), 4, max(2× cores, 8)). The
+        corpus is the one ``SPARK_GRAFT_SF_DIR`` names, read when the
+        session is first created, so it must name the corpus being
+        queried: a session reused for a larger corpus keeps the
+        smaller count, and AQE can only coalesce down, never split
+        up. On a 1000-executor cluster the count moves to
+        spark-submit conf near (total input bytes / 128 MiB).
       * UTC session timezone — matches DuckDB's naive-UTC timestamps
         so oracle comparison is exact (SURVEY.md §7 watch-list #5).
       * Arrow enabled for any Pandas-UDF path (vectorized transfer).

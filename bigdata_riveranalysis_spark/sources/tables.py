@@ -19,6 +19,8 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdata_riveranalysis_spark import sizing
+
 #: Every table the engine serves, in dependency-ish order.
 TABLES = (
     "region",
@@ -308,20 +310,7 @@ def _parse_bytes(v: str) -> int:
     return int(s)
 
 
-#: Floor on rows per spread task (r17, guide §2.2 — VERDICT r16 #2):
-#: the spread exists to parallelize per-row-HEAVY work (hashing,
-#: regex, binary decode), and below ~256 rows a task's fixed overhead
-#: exceeds any per-row win — measured on the sf0.1 corpus at
-#: local[32], where capping the 5,000-doc spread at rows/256 = 20
-#: partitions beat the flat 32-way spread on every consumer class,
-#: including the heaviest (multimodal_features 0.542 -> 0.374 s,
-#: text_quality_scores 0.386 -> 0.282, doc_surprisal 0.458 -> 0.316).
-#: Scale-adaptive: the cap grows with rows and saturates at
-#: defaultParallelism, so real corpora still spread to every core.
-_SPREAD_MIN_ROWS_PER_TASK = 256
-
-
-def spread_small_scan(spark: SparkSession, df: DataFrame, path: str | None = None) -> DataFrame:
+def spread_small_scan(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
     """Round-robin a scan across cores ONLY when it under-splits.
 
     The local test corpus is one small parquet file → one input split
@@ -332,7 +321,7 @@ def spread_small_scan(spark: SparkSession, df: DataFrame, path: str | None = Non
     shuffle IS the query cost. Gate on the split count so the
     big-data plan stays Exchange-free (VERDICT r1 'What's wrong' #4).
 
-    With ``path`` the split count is ESTIMATED from file metadata —
+    The split count is ESTIMATED from ``path``'s file metadata —
     pure driver-side arithmetic mirroring Spark's FilePartition
     sizing: ``maxSplitBytes = min(maxPartitionBytes,
     max(openCostInBytes, (totalBytes + openCost·nFiles) / minPartitionNum))``
@@ -340,39 +329,23 @@ def spread_small_scan(spark: SparkSession, df: DataFrame, path: str | None = Non
     matters: for mid-size tables Spark itself already produces
     ~defaultParallelism splits, and the naive bytes/maxPartitionBytes
     estimate would undercount and insert the very Exchange this gate
-    exists to avoid (ADVICE r3). Without ``path``, the legacy df.rdd
-    probe runs, which forces a conversion plan per call (ADVICE r2)
-    — pass the path.
+    exists to avoid (ADVICE r3). The spread width is
+    ``sizing.partitions("scan_spread")``: never thinner than 256 rows
+    per task, never wider than defaultParallelism.
     """
-    target = spark.sparkContext.defaultParallelism
-    if path is not None:
-        files = _table_files(path)
-        rows, total_bytes = _footer_stats(path)
-        # Row-aware cap (see _SPREAD_MIN_ROWS_PER_TASK): never spread
-        # thinner than 256 rows per task.
-        target = min(
-            target, max(1, -(-rows // _SPREAD_MIN_ROWS_PER_TASK))
-        )
-        max_part = _parse_bytes(
-            spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
-        )
-        open_cost = _parse_bytes(
-            spark.conf.get("spark.sql.files.openCostInBytes", "4194304")
-        )
-        min_parts = int(
-            spark.conf.get(
-                "spark.sql.files.minPartitionNum", str(spark.sparkContext.defaultParallelism)
-            )
-        )
-        padded = total_bytes + open_cost * len(files)
-        max_split = min(max_part, max(open_cost, -(-padded // max(min_parts, 1))))
-        # Splits bin-pack into partitions of ≤ maxSplitBytes at
-        # openCost-padded sizes (FilePartition.getFilePartitions).
-        est_splits = max(1, -(-padded // max(max_split, 1)))
-        return df.repartition(target) if est_splits < target else df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    files = _table_files(path)
+    rows, total_bytes = _footer_stats(path)
+    cores = spark.sparkContext.defaultParallelism
+    max_part = _parse_bytes(spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728"))
+    open_cost = _parse_bytes(spark.conf.get("spark.sql.files.openCostInBytes", "4194304"))
+    min_parts = int(spark.conf.get("spark.sql.files.minPartitionNum", str(cores)))
+    padded = total_bytes + open_cost * len(files)
+    max_split = min(max_part, max(open_cost, -(-padded // max(min_parts, 1))))
+    # Splits bin-pack into partitions of ≤ maxSplitBytes at
+    # openCost-padded sizes (FilePartition.getFilePartitions).
+    est_splits = max(1, -(-padded // max(max_split, 1)))
+    n = sizing.partitions("scan_spread", rows=rows, cores=cores, current=est_splits)
+    return df.repartition(n) if n > est_splits else df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

@@ -150,22 +150,3 @@ def test_vector_fold_single_event_and_empty_state_segments():
     closed2, cur2 = _vector_fold_as_tuples(cur, ts2, eids2, GAP_US)
     assert closed2 == [(10**15, 10**15, 1, 5)]
     assert cur2 == [10**15 + GAP_US * 10, 10**15 + GAP_US * 10, 1, 6]
-
-
-def test_stream_partition_sizing_rule():
-    """The per-operator-class sizing (r16): Python-stateful streams
-    get parallelism//2 (each state partition is one Python worker —
-    4 starved the pool, measured 4.56 → 2.32 s on the sessionizer),
-    JVM stateful aggregates keep parallelism//8 (per-store
-    maintenance dominates — the control REGRESSED 0.89 → 1.68 s at
-    16). Both floor at 4 and scale with the driver's core count."""
-    from bigdata_riveranalysis_spark.plans.streaming_queries import (
-        _stream_partitions,
-    )
-
-    assert _stream_partitions(32, python_stateful=True) == 16
-    assert _stream_partitions(32, python_stateful=False) == 4
-    assert _stream_partitions(8, python_stateful=True) == 4
-    assert _stream_partitions(8, python_stateful=False) == 4
-    assert _stream_partitions(128, python_stateful=True) == 64
-    assert _stream_partitions(128, python_stateful=False) == 16

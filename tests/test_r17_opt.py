@@ -172,6 +172,7 @@ def test_staged_frames_are_rightsized_by_bytes(spark, monkeypatch):
     build plan's cores-derived partitioning — stage() re-lands it at
     ceil(bytes / target) partitions, rows unchanged. A frame whose
     bytes justify its partitioning is left alone."""
+    from bigdata_riveranalysis_spark import sizing
     from bigdata_riveranalysis_spark.plans import staging as S
 
     S.clear_index_memo()
@@ -182,7 +183,7 @@ def test_staged_frames_are_rightsized_by_bytes(spark, monkeypatch):
     assert sorted(r.id for r in got.collect()) == list(range(1000))
     # bytes-justified partitioning is untouched: shrink the target so
     # the same frame's bytes demand >= its partition count
-    monkeypatch.setattr(S, "_RIGHTSIZE_TARGET_BYTES", 1)
+    monkeypatch.setattr(sizing, "STAGED_BYTES_PER_PART", 1)
     S.clear_index_memo()
     got2 = S.stage(spark, SF_SMOKE, "r17_rightsize_probe2", lambda: wide)
     assert got2.rdd.getNumPartitions() == 24
@@ -190,7 +191,7 @@ def test_staged_frames_are_rightsized_by_bytes(spark, monkeypatch):
 
 def test_spread_small_scan_row_cap(spark, tmp_path):
     """The under-split spread never goes thinner than
-    _SPREAD_MIN_ROWS_PER_TASK rows per task: a 1,000-row single-file
+    sizing.SPREAD_MIN_ROWS_PER_TASK rows per task: a 1,000-row single-file
     table spreads to ceil(1000/256)=4 partitions on local[32], not
     32; a table with >= 256·cores rows still spreads to every core."""
     import pyarrow as pa
