@@ -62,16 +62,7 @@ def wide_sum(int_col: Column) -> Column:
     most sum-dense query — 0.66 s → 1.05 s. Accepted: the long path's
     ANSI overflow is a correctness cliff, and at real scale these
     scans are IO-bound, so the Decimal128 ALU cost amortizes away.
-
-    ``SPARK_GRAFT_LONG_SUMS=1`` switches back to plain long sums —
-    an A/B instrument ONLY (quantifying the Decimal128 tax across the
-    registry, VERDICT r6 #5), never a production mode: it re-opens
-    the ~sf30 ANSI overflow cliff this function exists to close.
     """
-    import os
-
-    if os.environ.get("SPARK_GRAFT_LONG_SUMS") == "1":
-        return F.sum(int_col)
     return F.sum(int_col.cast("decimal(38,0)"))
 
 

@@ -28,19 +28,20 @@ order) — i.e. exactly the persisted per-corpus index artifacts a
 production run maintains on durable storage, held here as session
 blocks.
 
-Cluster-mode posture (the 1000-executor design, VERDICT r13 #3 —
-now a SWITCH, not prose): by default ``materialize`` uses
-``localCheckpoint`` — blocks live on executors, lineage is cut, so a
-LOST EXECUTOR makes its blocks unrecoverable. Fine on local[n] (one
-process, dies atomically) and for cheap-to-rebuild stages. A
-long-lived cluster session sets ``SPARK_GRAFT_CHECKPOINT_DIR`` to a
-durable path (HDFS/S3/NFS); ``materialize`` then routes every staged
-frame through a RELIABLE ``checkpoint()`` under that dir, so staged
-artifacts survive executor loss exactly like the persisted index
-twins (sinks.write_ivfpq_index et al.). The env var is read at each
-materialization, so a test can flip modes inside one session; both
-modes produce byte-identical results (pinned by
-tests/test_r14_fixes.py). spark.catalog.clearCache() does NOT drop
+Cluster-mode posture (the 1000-executor design, VERDICT r13 item 3): by
+default ``materialize`` uses ``localCheckpoint`` — blocks live on
+executors, lineage is cut, so a LOST EXECUTOR makes its blocks
+unrecoverable. Fine on local[n] (one process, dies atomically) and
+for cheap-to-rebuild stages. A long-lived cluster session gives its
+SparkContext a checkpoint dir on durable storage (HDFS/S3/NFS) —
+``--conf spark.checkpoint.dir=<path>`` at submit, or
+``sc.setCheckpointDir`` — and ``materialize`` then routes every
+staged frame through a RELIABLE ``checkpoint()`` under that dir, so
+staged artifacts survive executor loss exactly like the persisted
+index twins (sinks.write_ivfpq_index et al.). The engine never
+installs or changes the dir; it reads the context's at each
+materialization. Both modes produce byte-identical results (pinned
+by tests/test_r14_fixes.py). spark.catalog.clearCache() does NOT drop
 RDD-level checkpoint blocks (pinned by tests/test_r13_fixes.py), so
 the bench's between-query cache clearing leaves the memo intact,
 exactly like a persisted index would be.
@@ -98,8 +99,13 @@ def _is_lineage_cut(df: DataFrame) -> bool:
     try:
         root = df._jdf.queryExecution().analyzed()
         return root.getClass().getSimpleName() == "LogicalRDD"
-    except Exception:  # pragma: no cover - no JVM handle
+    except (Py4JError, AttributeError):  # pragma: no cover - no JVM handle
         return True
+
+
+def _durable(df: DataFrame) -> bool:
+    """True iff the frame's SparkContext has a checkpoint dir."""
+    return df.sparkSession.sparkContext.getCheckpointDir() is not None
 
 
 def materialize(df: DataFrame) -> DataFrame:
@@ -108,69 +114,13 @@ def materialize(df: DataFrame) -> DataFrame:
 
     Default: ``localCheckpoint(eager=True)`` — executor-local blocks,
     no durable I/O, the right call on local[n] and for short-lived
-    sessions. With ``SPARK_GRAFT_CHECKPOINT_DIR`` set: a reliable
-    ``checkpoint(eager=True)`` under that dir — staged artifacts
-    survive lost executors, the long-lived-cluster posture. The
-    checkpoint dir is installed once per SparkContext per TARGET
-    (Spark creates a fresh UUID subdir per setCheckpointDir call, so
-    re-setting on every materialization would scatter the stages) —
-    but the env var is re-checked against the installed dir's PARENT
-    each time, so flipping SPARK_GRAFT_CHECKPOINT_DIR from one path to
-    another mid-session re-routes instead of being silently ignored
-    (ADVICE r14: the isEmpty()-only check contradicted the
-    'read at each materialization' contract for dir-to-dir flips)."""
-    ckpt_dir = _os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if ckpt_dir:
-        sc = df.sparkSession.sparkContext
-        current = sc._jsc.sc().getCheckpointDir()
-        if current.isEmpty() or _dir_parent(current.get()) != _qualify(
-            df, ckpt_dir
-        ):
-            sc.setCheckpointDir(ckpt_dir)
+    sessions. When the SparkContext has a checkpoint dir (see the
+    module docstring): a reliable ``checkpoint(eager=True)`` under that
+    dir — staged artifacts survive lost executors, the long-lived-
+    cluster posture."""
+    if _durable(df):
         return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=True)
-
-
-def _qualify(df: DataFrame, p: str) -> str:
-    """The env-supplied checkpoint target in the same FULLY-QUALIFIED
-    form SparkContext.setCheckpointDir stores it (resolved against the
-    session's default filesystem), then normalized like the installed
-    side. ADVICE r15: Spark/Hadoop stores the installed dir qualified
-    with defaultFS, so on a cluster where defaultFS is hdfs and
-    SPARK_GRAFT_CHECKPOINT_DIR is a bare path (``/ckpt``), comparing
-    the raw env string against the installed parent
-    (``hdfs://nn:8020/ckpt``) mismatches FOREVER — setCheckpointDir is
-    then re-called per materialization, scattering stages across fresh
-    UUID subdirs, the exact behavior the comparison exists to avoid.
-    Falls back to scheme-stripped normalization when no JVM handle is
-    available (non-JVM frames; the local-path case both forms agree
-    on)."""
-    try:
-        sess = df.sparkSession
-        jpath = sess._jvm.org.apache.hadoop.fs.Path(p)
-        fs = jpath.getFileSystem(sess.sparkContext._jsc.hadoopConfiguration())
-        return _norm_path(fs.makeQualified(jpath).toString())
-    except Exception:  # pragma: no cover - no JVM handle
-        return _norm_path(p)
-
-
-def _norm_path(p: str) -> str:
-    """Scheme-stripped absolute form of a checkpoint target, so
-    ``file:/tmp/x``, ``file:///tmp/x`` and ``/tmp/x`` compare equal.
-    Non-local schemes (hdfs://, s3a://) keep authority + path."""
-    from urllib.parse import urlparse
-
-    u = urlparse(p)
-    if u.scheme in ("", "file"):
-        return _os.path.abspath(u.path)
-    return f"{u.scheme}://{u.netloc}{u.path}".rstrip("/")
-
-
-def _dir_parent(installed: str) -> str:
-    """The user-supplied parent of an installed checkpoint dir:
-    SparkContext.setCheckpointDir stores ``<given>/<uuid>``, so the
-    comparison target is the dirname."""
-    return _norm_path(installed.rsplit("/", 1)[0])
 
 
 def _rightsize(df: DataFrame) -> DataFrame:
@@ -241,7 +191,7 @@ def stage(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
         # and staged frames are slim by design, so the extra copy
         # of a pre-cut frame is a few KB of durable I/O.
         pre_cut = _is_lineage_cut(df)
-        durable = bool(_os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR"))
+        durable = _durable(df)
         if durable or not pre_cut:
             df = materialize(df)
         if not durable and not pre_cut:

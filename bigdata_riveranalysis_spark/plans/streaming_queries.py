@@ -114,35 +114,18 @@ def _run_stream(
     # Both it and the no-data-batch skip are set just for this
     # query and restored after termination; a conf the query does not
     # change is never read or written.
-    # State-store PROVIDER (VERDICT r5 #6): measured A/B on the bench
-    # corpus (sf0.1, ~100k events, 6 stream queries, warm runs of 3):
-    # default HDFS-backed in-memory store 7.55-7.63 s total vs RocksDB
-    # 7.51-8.74 s — a wash, slightly RocksDB-worse on the stateful-
-    # heavy queries (stream_windowed_quality 1.84→2.13 s,
-    # stream_stream_join 2.35→2.59 s median): at this state volume the
-    # per-store JNI + native-DB open cost buys nothing because all
-    # state fits comfortably in heap. RocksDB's regime is the opposite
-    # one — state larger than executor memory (its LSM spills to local
-    # disk) and long-running queries (changelog/incremental
-    # checkpointing beats full HDFS snapshots) — i.e. exactly the
-    # 100 TB deployment, so the provider is a config hook, not a
-    # hardcode: SPARK_GRAFT_STATE_STORE=rocksdb flips it (parity
-    # pinned by tests/test_streaming.py::test_rocksdb_state_store_parity).
-    _PROVIDERS = {
-        "rocksdb": "RocksDBStateStoreProvider",
-        "": "HDFSBackedStateStoreProvider",  # Spark's default, set
-        # explicitly so one rocksdb run can't leak into later
-        # default-mode runs on the same session.
-    }
-    choice = os.environ.get("SPARK_GRAFT_STATE_STORE", "").lower()
-    if choice not in _PROVIDERS:
-        raise ValueError(
-            f"SPARK_GRAFT_STATE_STORE={choice!r}: expected 'rocksdb' or unset"
-        )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." + _PROVIDERS[choice],
-    )
+    # State-store PROVIDER (VERDICT r5 item 6): the session's own
+    # spark.sql.streaming.stateStore.providerClass, never set here —
+    # Spark's HDFS-backed default, or RocksDBStateStoreProvider via
+    # --conf at submit. Measured A/B on the bench corpus (sf0.1, ~100k
+    # events, 6 stream queries, warm runs of 3): default 7.55-7.63 s
+    # total vs RocksDB 7.51-8.74 s — a wash, slightly RocksDB-worse on
+    # the stateful-heavy queries (stream_windowed_quality 1.84→2.13 s,
+    # stream_stream_join 2.35→2.59 s median): all state fits in heap,
+    # so the per-store JNI + native-DB open cost buys nothing.
+    # RocksDB's regime is state larger than executor memory and
+    # long-running queries — the 100 TB deployment. Parity pinned by
+    # tests/test_streaming.py::test_rocksdb_state_store_parity.
     # Deterministic per-query sink name: the memory sink registers via
     # createOrReplaceTempView, so a repeat invocation (bench min-of-N)
     # REPLACES the previous run's result table instead of accumulating

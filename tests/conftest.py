@@ -7,6 +7,7 @@ small locally; production sizing notes live in session.py.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -25,6 +26,19 @@ def spark():
 
     spark = get_spark("engine-tests", shuffle_partitions=8)
     yield spark
+
+
+@contextlib.contextmanager
+def checkpoint_dir(spark, path):
+    """Give the session's SparkContext a checkpoint dir for the block
+    (staging's durable mode), and remove it on exit so no later test
+    runs durable on the shared session."""
+    sc = spark.sparkContext
+    sc.setCheckpointDir(str(path))
+    try:
+        yield
+    finally:
+        sc._jsc.sc().setCheckpointDir(None)
 
 
 @pytest.fixture(scope="session")

@@ -1,8 +1,9 @@
-"""Ratchet on two of the engine's design numbers (ROADMAP aim 2):
-blanket ``except Exception`` handlers and query-time ``conf.set``
-calls in ``bigdata_riveranalysis_spark/``. Either count may fall; a
-change that raises one fails here. Lower the ceiling when a change
-removes a site. Pure Python: the source is parsed, not imported.
+"""Ratchet on three of the engine's design numbers (ROADMAP aim 2):
+blanket ``except Exception`` handlers, query-time ``conf.set`` calls
+and the distinct ``SPARK_GRAFT_*`` environment switches read in
+``bigdata_riveranalysis_spark/``. Any count may fall; a change that
+raises one fails here. Lower the ceiling when a change removes a
+site. Pure Python: the source is parsed, not imported.
 """
 
 from __future__ import annotations
@@ -12,8 +13,11 @@ from pathlib import Path
 
 PKG = Path(__file__).resolve().parent.parent / "bigdata_riveranalysis_spark"
 
-MAX_EXCEPT_EXCEPTION = 4
-MAX_CONF_SET = 6
+MAX_EXCEPT_EXCEPTION = 2
+MAX_CONF_SET = 5
+#: SPARK_GRAFT_CPUS, SPARK_GRAFT_SF_DIR, SPARK_GRAFT_ON_CLUSTER. Every
+#: other deployment choice is a Spark conf.
+MAX_ENV_SWITCHES = 3
 
 
 def _nodes():
@@ -40,6 +44,23 @@ def _is_conf_set(node: ast.AST) -> bool:
     )
 
 
+def _env_switch(node: ast.AST) -> str | None:
+    """The SPARK_GRAFT_* name read by ``os.environ.get(...)``,
+    ``os.environ[...]`` or ``os.getenv(...)``, else None."""
+    f = getattr(node, "func", None)
+    if isinstance(node, ast.Subscript) and getattr(node.value, "attr", None) == "environ":
+        key = node.slice
+    elif isinstance(node, ast.Call) and node.args and isinstance(f, ast.Attribute) and (
+        f.attr == "getenv" or (f.attr == "get" and getattr(f.value, "attr", None) == "environ")
+    ):
+        key = node.args[0]
+    else:
+        return None
+    if isinstance(key, ast.Constant) and str(key.value).startswith("SPARK_GRAFT_"):
+        return key.value
+    return None
+
+
 def test_blanket_except_sites_do_not_grow():
     n = sum(map(_is_blanket_except, _nodes()))
     assert n <= MAX_EXCEPT_EXCEPTION, n
@@ -48,3 +69,8 @@ def test_blanket_except_sites_do_not_grow():
 def test_query_time_conf_set_calls_do_not_grow():
     n = sum(map(_is_conf_set, _nodes()))
     assert n <= MAX_CONF_SET, n
+
+
+def test_env_switches_do_not_grow():
+    names = {n for n in map(_env_switch, _nodes()) if n}
+    assert len(names) <= MAX_ENV_SWITCHES, sorted(names)

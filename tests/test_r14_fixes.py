@@ -1,7 +1,7 @@
 """r14 regression pins.
 
-  1. The staging memo's durable mode (VERDICT r13 #3): with
-     SPARK_GRAFT_CHECKPOINT_DIR set, every staged frame routes through
+  1. The staging memo's durable mode (VERDICT r13 item 3): with a
+     SparkContext checkpoint dir, every staged frame routes through
      a RELIABLE checkpoint under that dir (survives lost executors on
      a cluster) and produces byte-identical results to the default
      localCheckpoint mode — checked on one ANN consumer and one
@@ -30,7 +30,7 @@ import os
 import threading
 import time
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, checkpoint_dir
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -47,7 +47,7 @@ def _tbl_hash(df):
 # ---------------------------------------------------------------------------
 
 
-def test_durable_mode_identical_hashes_and_durable_files(spark, tmp_path, monkeypatch):
+def test_durable_mode_identical_hashes_and_durable_files(spark, tmp_path):
     from bigdata_riveranalysis_spark.plans import llmdata as L
     from bigdata_riveranalysis_spark.plans import staging as S
 
@@ -57,36 +57,40 @@ def test_durable_mode_identical_hashes_and_durable_files(spark, tmp_path, monkey
     L.clear_index_memo()
 
     ckpt = tmp_path / "ckpt"
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckpt))
     try:
-        dur_ann = _tbl_hash(L.ann_ivf_pq(spark, SF_SMOKE))
-        dur_mh = _tbl_hash(L.dedup_minhash_lsh(spark, SF_SMOKE))
-        # the reliable path actually ran: RDD checkpoint files exist
-        # under the configured dir, and every memoized frame is
-        # lineage-cut (a LogicalRDD scan, not a recomputable plan).
-        files = [p for p in ckpt.rglob("*") if p.is_file()]
-        assert files, "durable mode must write checkpoint files"
-        assert S._INDEX_MEMO, "the consumers must have staged artifacts"
-        assert all(S._is_lineage_cut(df) for df in S._INDEX_MEMO.values())
+        with checkpoint_dir(spark, ckpt):
+            dur_ann = _tbl_hash(L.ann_ivf_pq(spark, SF_SMOKE))
+            dur_mh = _tbl_hash(L.dedup_minhash_lsh(spark, SF_SMOKE))
+            # the reliable path actually ran: RDD checkpoint files exist
+            # under the configured dir, and every memoized frame is
+            # lineage-cut (a LogicalRDD scan, not a recomputable plan).
+            files = [p for p in ckpt.rglob("*") if p.is_file()]
+            assert files, "durable mode must write checkpoint files"
+            assert S._INDEX_MEMO, "the consumers must have staged artifacts"
+            assert all(S._is_lineage_cut(df) for df in S._INDEX_MEMO.values())
     finally:
-        monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
         L.clear_index_memo()
     assert dur_ann == base_ann, "ANN results must not depend on the checkpoint mode"
     assert dur_mh == base_mh, "MinHash results must not depend on the checkpoint mode"
 
 
-def test_materialize_routes_on_env(spark, tmp_path, monkeypatch):
+def test_materialize_routes_on_checkpoint_dir(spark, tmp_path):
     from bigdata_riveranalysis_spark.plans import staging as S
 
-    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    def ckpt_file(df):
+        return df._jdf.queryExecution().analyzed().rdd().getCheckpointFile()
+
+    assert spark.sparkContext.getCheckpointDir() is None
     local = S.materialize(spark.range(3))
     assert S._is_lineage_cut(local)
+    assert not ckpt_file(local).isDefined()
 
     ckpt = tmp_path / "ck2"
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ckpt))
-    durable = S.materialize(spark.range(3))
+    with checkpoint_dir(spark, ckpt):
+        durable = S.materialize(spark.range(3))
     assert S._is_lineage_cut(durable)
-    assert [p for p in ckpt.rglob("*") if p.is_file()] or not spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty()
+    assert ckpt_file(durable).isDefined()
+    assert [p for p in ckpt.rglob("*") if p.is_file()]
     assert sorted(r.id for r in durable.collect()) == [0, 1, 2]
 
 

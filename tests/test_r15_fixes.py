@@ -11,10 +11,9 @@
      as 0.0 no longer makes the row silently unflaggable —
      ``flag_rows`` guards explicitly and ``requalify`` records the
      row as ``{"zero_floor": true}`` in the evidence map.
-  3. Staging memo hygiene (ADVICE r14): flipping
-     SPARK_GRAFT_CHECKPOINT_DIR to a DIFFERENT path mid-session
-     re-routes new materializations (the isEmpty()-only check silently
-     ignored dir-to-dir flips); clear_index_memo deletes durable
+  3. Staging memo hygiene (ADVICE r14): moving the SparkContext's
+     checkpoint dir to a DIFFERENT path mid-session re-routes new
+     materializations; clear_index_memo deletes durable
      checkpoint FILES (reliable-checkpoint files are not blocks —
      without cleanCheckpoints on the host session they leak forever);
      different stage keys build in parallel instead of serializing
@@ -27,7 +26,7 @@ import glob
 import os
 import threading
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, checkpoint_dir
 
 
 def _toy_query(s, d):
@@ -162,47 +161,39 @@ def _ckpt_rdd_dirs(root) -> list[str]:
     return glob.glob(os.path.join(str(root), "**", "rdd-*"), recursive=True)
 
 
-def test_checkpoint_dir_flip_reroutes(spark, tmp_path, monkeypatch):
-    """Mid-session SPARK_GRAFT_CHECKPOINT_DIR dir-to-dir flips must
+def test_checkpoint_dir_flip_reroutes(spark, tmp_path):
+    """Moving the SparkContext's checkpoint dir mid-session must
     re-route new materializations, not be silently ignored."""
     from bigdata_riveranalysis_spark.plans import staging as S
 
     S.clear_index_memo()
     d1, d2 = tmp_path / "ck1", tmp_path / "ck2"
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(d1))
-    S.stage(spark, SF_SMOKE, "r15_flip_a", lambda: spark.range(10))
+    with checkpoint_dir(spark, d1):
+        S.stage(spark, SF_SMOKE, "r15_flip_a", lambda: spark.range(10))
     assert _ckpt_rdd_dirs(d1), "first stage must checkpoint under dir 1"
 
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(d2))
-    S.stage(spark, SF_SMOKE, "r15_flip_b", lambda: spark.range(20))
+    with checkpoint_dir(spark, d2):
+        S.stage(spark, SF_SMOKE, "r15_flip_b", lambda: spark.range(20))
     assert _ckpt_rdd_dirs(d2), "post-flip stage must checkpoint under dir 2"
     S.clear_index_memo()
-    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
-    # Leave the context back on a tmp dir-less posture for later tests:
-    # the installed checkpoint dir is harmless (only durable mode uses
-    # it) but must not point at a deleted tmp_path for THIS session's
-    # remaining durable tests — each re-sets the env and re-routes.
 
 
-def test_clear_index_memo_deletes_durable_checkpoint_files(
-    spark, tmp_path, monkeypatch
-):
+def test_clear_index_memo_deletes_durable_checkpoint_files(spark, tmp_path):
     """Reliable-checkpoint files are not blocks: clear_index_memo must
     delete them (Spark only would with cleanCheckpoints enabled)."""
     from bigdata_riveranalysis_spark.plans import staging as S
 
     S.clear_index_memo()
     ck = tmp_path / "ck_durable"
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ck))
-    got = S.stage(spark, SF_SMOKE, "r15_durable_probe", lambda: spark.range(500))
-    assert got.count() == 500
-    before = _ckpt_rdd_dirs(ck)
-    assert before, "precondition: durable mode must write checkpoint files"
-    S.clear_index_memo()
-    assert not _ckpt_rdd_dirs(ck), (
-        "clear must delete the dropped frames' durable checkpoint dirs"
-    )
-    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
+    with checkpoint_dir(spark, ck):
+        got = S.stage(spark, SF_SMOKE, "r15_durable_probe", lambda: spark.range(500))
+        assert got.count() == 500
+        before = _ckpt_rdd_dirs(ck)
+        assert before, "precondition: durable mode must write checkpoint files"
+        S.clear_index_memo()
+        assert not _ckpt_rdd_dirs(ck), (
+            "clear must delete the dropped frames' durable checkpoint dirs"
+        )
 
 
 def test_stage_different_keys_build_in_parallel(spark):

@@ -1,10 +1,9 @@
 """r16 regression pins (ADVICE r15 + VERDICT r15 #3/#5/#6).
 
-  1. Checkpoint-dir comparison is defaultFS-qualified (ADVICE r15
-     medium): the installed dir is stored fully qualified, so a bare
-     env path must be qualified the same way before comparing or a
-     cluster with hdfs defaultFS re-calls setCheckpointDir per
-     materialization forever.
+  1. One checkpoint-dir installation per session (ADVICE r15 medium):
+     durable staging writes under the SparkContext's own checkpoint
+     dir and never re-installs it, so stages do not scatter across
+     fresh UUID subdirs.
   2. Staging KEY LOCKS are never dropped (ADVICE r15 low):
      clear_index_memo / other-app eviction used to delete RLocks a
      build could be holding, so a same-key stage() after the clear
@@ -34,7 +33,7 @@ import glob
 import os
 import threading
 
-from .conftest import SF_SMOKE
+from .conftest import SF_SMOKE, checkpoint_dir
 from .test_r15_fixes import _ev, _patch_probes, _replay_batches
 
 
@@ -43,63 +42,26 @@ def _toy_query(s, d):
 
 
 # ---------------------------------------------------------------------------
-# 1. checkpoint-dir comparison is defaultFS-qualified
+# 1. one checkpoint-dir installation per session
 # ---------------------------------------------------------------------------
 
 
-def test_qualified_env_path_matches_installed_parent(spark, tmp_path, monkeypatch):
-    """The exact comparison materialize() makes — installed parent vs
-    qualified env path — must hold for a BARE local path through the
-    real Hadoop makeQualified path (not the no-JVM fallback), because
-    Spark stores the installed dir fully qualified."""
-    from bigdata_riveranalysis_spark.plans import staging as S
-
-    bare = str(tmp_path / "ck_qual")
-    sc = spark.sparkContext
-    sc.setCheckpointDir(bare)
-    installed = sc._jsc.sc().getCheckpointDir().get()
-    assert "://" in installed or installed.startswith("file:"), (
-        f"precondition: Spark stores the dir qualified, got {installed!r}"
-    )
-    df = spark.range(1)
-    assert S._dir_parent(installed) == S._qualify(df, bare)
-
-
-def test_hdfs_shaped_installed_dir_vs_bare_env_path():
-    """Pure-logic pin of the ADVICE r15 defect shape: on a cluster
-    where defaultFS is hdfs, the installed parent normalizes WITH
-    authority while the raw env path has none — the r15 comparison
-    (_dir_parent vs _norm_path) therefore mismatched permanently.
-    _qualify exists to resolve the env side against defaultFS; its
-    no-JVM fallback still normalizes an ALREADY-qualified env value to
-    the matching form."""
-    from bigdata_riveranalysis_spark.plans import staging as S
-
-    installed = "hdfs://nn:8020/ckpt/55a1c2d3-uuid"
-    assert S._dir_parent(installed) == "hdfs://nn:8020/ckpt"
-    # the defect: bare path never equals the authority-qualified parent
-    assert S._norm_path("/ckpt") != S._dir_parent(installed)
-    # an env value spelled fully qualified compares equal either way
-    assert S._norm_path("hdfs://nn:8020/ckpt") == S._dir_parent(installed)
-
-
-def test_no_uuid_scatter_across_materializations(spark, tmp_path, monkeypatch):
-    """Two stage() calls under one unchanged SPARK_GRAFT_CHECKPOINT_DIR
-    must share ONE setCheckpointDir installation (one UUID subdir) —
-    the scatter the qualified comparison prevents."""
+def test_no_uuid_scatter_across_materializations(spark, tmp_path):
+    """Two stage() calls under one unchanged checkpoint dir must share
+    ONE setCheckpointDir installation (one UUID subdir): the engine
+    writes under the context's dir and never re-installs it."""
     from bigdata_riveranalysis_spark.plans import staging as S
 
     S.clear_index_memo()
     ck = tmp_path / "ck_scatter"
-    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", str(ck))
-    S.stage(spark, SF_SMOKE, "r16_scatter_a", lambda: spark.range(5))
-    S.stage(spark, SF_SMOKE, "r16_scatter_b", lambda: spark.range(6))
-    uuid_dirs = [p for p in glob.glob(os.path.join(str(ck), "*")) if os.path.isdir(p)]
-    assert len(uuid_dirs) == 1, (
-        f"expected one UUID checkpoint subdir, got {uuid_dirs}"
-    )
-    S.clear_index_memo()
-    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR")
+    with checkpoint_dir(spark, ck):
+        S.stage(spark, SF_SMOKE, "r16_scatter_a", lambda: spark.range(5))
+        S.stage(spark, SF_SMOKE, "r16_scatter_b", lambda: spark.range(6))
+        uuid_dirs = [p for p in glob.glob(os.path.join(str(ck), "*")) if os.path.isdir(p)]
+        assert len(uuid_dirs) == 1, (
+            f"expected one UUID checkpoint subdir, got {uuid_dirs}"
+        )
+        S.clear_index_memo()
 
 
 # ---------------------------------------------------------------------------

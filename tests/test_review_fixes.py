@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
-
 
 def test_parse_readings_nulls_dirty_fields_under_ansi(spark):
     """Well-formed JSON with a non-numeric measurement or a
@@ -58,57 +56,6 @@ def test_flag_anomalies_keeps_null_sensor_rows(spark):
     out = flag_anomalies(readings).collect()
     assert len(out) == 3
     assert sum(1 for r in out if r.sensor_id is None) == 2
-
-
-def test_upsert_rename_refuses_pointer_committed_table(spark, tmp_path):
-    """rename-commit against a pointer-committed serving path must
-    fail loudly instead of sweeping away the live generation."""
-    from bigdata_riveranalysis_spark.streaming.sinks import (
-        SERVING_POINTER_SUFFIX,
-        read_serving_table,
-        start_upsert_sink,
-    )
-    from bigdata_riveranalysis_spark.streaming.sources import file_json_stream
-
-    src = tmp_path / "in"
-    src.mkdir()
-    (src / "b0.json").write_text(
-        '{"event_id": 1, "ts": "2026-01-01T00:00:00", "user_id": 1,'
-        ' "event_type": "view", "value": 1.0, "props": "{}"}\n'
-    )
-    path = str(tmp_path / "serving")
-
-    stream = file_json_stream(spark, str(src))
-    q = start_upsert_sink(
-        stream.select("event_id", "value"),
-        path,
-        str(tmp_path / "ckpt1"),
-        ("event_id",),
-        output_mode="append",
-        trigger_available_now=True,
-        commit="pointer",
-    )
-    assert q.awaitTermination(120), "streaming query timed out (partial sink)"
-    assert os.path.exists(path + SERVING_POINTER_SUFFIX)
-    assert read_serving_table(spark, path).count() == 1
-
-    q2 = start_upsert_sink(
-        stream.select("event_id", "value"),
-        path,
-        str(tmp_path / "ckpt2"),
-        ("event_id",),
-        output_mode="append",
-        trigger_available_now=True,
-        commit="rename",
-    )
-    # awaitTermination raises StreamingQueryException itself when the
-    # batch fails (the exception() re-raise variant is unreachable);
-    # match pins the guard's message, and a silent timeout surfaces as
-    # DID-NOT-RAISE instead of masquerading as the guarded failure.
-    with pytest.raises(Exception, match="pointer-committed"):
-        q2.awaitTermination(120)
-    # the live generation must still be readable
-    assert read_serving_table(spark, path).count() == 1
 
 
 def test_resolve_serving_path_bare_relative(tmp_path, monkeypatch):

@@ -122,18 +122,21 @@ def test_stream_drain_touches_only_the_conf_it_changes(spark):
     """A drain that does not skip the no-data batch never reads or
     writes ``noDataMicroBatches.enabled``; one that does restores it
     exactly — unset stays unset. The shuffle-partition override is
-    restored too."""
+    restored too, and no drain writes the state-store provider."""
     import pyarrow.parquet as pq
 
     from bigdata_riveranalysis_spark.plans.streaming_queries import _events_stream, _run_stream
 
     key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    provider = "spark.sql.streaming.stateStore.providerClass"
     n_events = pq.read_metadata(os.path.join(SF_SMOKE, "events.parquet")).num_rows
     shuffle_before = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.unset(key)
+    spark.conf.unset(provider)
     for skip in (False, True):
         df = _events_stream(spark, SF_SMOKE).select("event_id")
         out = _run_stream(df, spark, "append", f"conf_scope_{skip}", skip_no_data_batch=skip)
         assert out.count() == n_events
         assert key not in spark.conf.getAll, (skip, spark.conf.get(key))
+        assert provider not in spark.conf.getAll, (skip, spark.conf.get(provider))
         assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle_before

@@ -280,102 +280,15 @@ def test_orc_round_trip(spark, tmp_path):
     assert {r.n_name for r in back.collect()} == {r.n_name for r in nation.collect()}
 
 
-def test_upsert_sink_keeps_latest_per_key(spark, tmp_path):
-    """Update-mode aggregation through the keyed upsert sink: after
-    two micro-batches the serving table holds ONE row per sensor with
-    the latest running aggregate, not an append history."""
-    from bigdata_riveranalysis_spark.streaming.sinks import start_upsert_sink
-
-    b1 = [_ev(1, "2024-01-01 00:00:00", user_id=1, value=10.0),
-          _ev(2, "2024-01-01 00:01:00", user_id=2, value=20.0)]
-    b2 = [_ev(3, "2024-01-01 00:02:00", user_id=1, value=30.0)]
-    src = _write_files(tmp_path, [b1, b2])
-    stream = file_json_stream(spark, src, max_files_per_trigger=1)
-    agg = stream.groupBy("user_id").agg(
-        F.count("*").alias("n"), F.sum("value").alias("total")
-    )
-    out, ckpt = str(tmp_path / "serve"), str(tmp_path / "ckpt_upsert")
-    q = start_upsert_sink(agg, out, ckpt, ("user_id",), trigger_available_now=True)
-    assert q.awaitTermination(120), "streaming query timed out (partial sink)"
-    rows = {r.user_id: r for r in spark.read.parquet(out).collect()}
-    assert set(rows) == {1, 2}
-    assert rows[1].n == 2 and rows[1].total == 40.0  # both batches folded
-    assert rows[2].n == 1 and rows[2].total == 20.0
-
-
-def test_upsert_sink_survives_read_failure(spark, tmp_path):
-    """A read/merge failure mid-upsert must FAIL the micro-batch, not
-    be mistaken for 'first batch' and overwrite the serving table with
-    only the current batch (the r1/r2 data-loss bug: bare except)."""
-    from bigdata_riveranalysis_spark.streaming.sinks import start_upsert_sink
-
-    b1 = [_ev(1, "2024-01-01 00:00:00", user_id=1, value=10.0)]
-    src1 = _write_files(tmp_path, [b1])
-    out, ckpt1 = str(tmp_path / "serve"), str(tmp_path / "ckpt_u1")
-    stream = file_json_stream(spark, src1, max_files_per_trigger=1)
-    agg = stream.groupBy("user_id").agg(F.sum("value").alias("total"))
-    q = start_upsert_sink(agg, out, ckpt1, ("user_id",), trigger_available_now=True)
-    assert q.awaitTermination(120), "streaming query timed out (partial sink)"
-    assert spark.read.parquet(out).count() == 1
-
-    # Corrupt the serving table so the next merge's read fails.
-    for f in os.listdir(out):
-        os.remove(os.path.join(out, f))
-    with open(os.path.join(out, "part-00000.parquet"), "w") as fh:
-        fh.write("this is not parquet")
-
-    nested = tmp_path / "second"
-    nested.mkdir()
-    b2 = [_ev(2, "2024-01-01 00:01:00", user_id=2, value=20.0)]
-    src2 = _write_files(nested, [b2])
-    stream2 = file_json_stream(spark, src2, max_files_per_trigger=1)
-    agg2 = stream2.groupBy("user_id").agg(F.sum("value").alias("total"))
-    q2 = start_upsert_sink(agg2, out, str(tmp_path / "ckpt_u2"), ("user_id",),
-                           trigger_available_now=True)
-    # match pins the INTENDED failure (merge-read of the corrupt
-    # parquet), not any incidental setup error (review finding).
-    with pytest.raises(Exception, match="(?i)parquet|footer|magic"):
-        assert q2.awaitTermination(120), "streaming query timed out (partial sink)"
-    # The (corrupt) table was left in place — never replaced by batch 2.
-    assert os.path.exists(os.path.join(out, "part-00000.parquet"))
-    with open(os.path.join(out, "part-00000.parquet")) as fh:
-        assert fh.read() == "this is not parquet"
-
-
-def test_upsert_sink_heals_renamed_aside_table(spark, tmp_path):
-    """Crash window between rename-aside and move-in: the next batch
-    restores `__old` and merges against it — no data loss."""
-    from bigdata_riveranalysis_spark.streaming.sinks import start_upsert_sink
-
-    b1 = [_ev(1, "2024-01-01 00:00:00", user_id=1, value=10.0)]
-    src1 = _write_files(tmp_path, [b1])
-    out, ckpt1 = str(tmp_path / "serve"), str(tmp_path / "ckpt_h1")
-    stream = file_json_stream(spark, src1, max_files_per_trigger=1)
-    agg = stream.groupBy("user_id").agg(F.sum("value").alias("total"))
-    q = start_upsert_sink(agg, out, ckpt1, ("user_id",), trigger_available_now=True)
-    assert q.awaitTermination(120), "streaming query timed out (partial sink)"
-
-    os.rename(out, out + "__old")  # simulate the crash window
-
-    nested = tmp_path / "second"
-    nested.mkdir()
-    b2 = [_ev(2, "2024-01-01 00:01:00", user_id=2, value=20.0)]
-    src2 = _write_files(nested, [b2])
-    stream2 = file_json_stream(spark, src2, max_files_per_trigger=1)
-    agg2 = stream2.groupBy("user_id").agg(F.sum("value").alias("total"))
-    q2 = start_upsert_sink(agg2, out, str(tmp_path / "ckpt_h2"), ("user_id",),
-                           trigger_available_now=True)
-    assert q2.awaitTermination(120), "streaming query timed out (partial sink)"
-    rows = {r.user_id: r.total for r in spark.read.parquet(out).collect()}
-    assert rows == {1: 10.0, 2: 20.0}
-    assert not os.path.exists(out + "__old")
-
-
 def test_upsert_sink_sweeps_orphan_shadow_dirs(spark, tmp_path):
-    """A crash after tmp-write but before the swap leaves a
-    `{path}__b{N}` shadow dir; the next batch must sweep it instead of
-    letting them accumulate across restarts (ADVICE r3)."""
-    from bigdata_riveranalysis_spark.streaming.sinks import start_upsert_sink
+    """A crash after a generation write but before the pointer flip
+    leaves a `{path}__b{N}` dir; the next batch (here the first) must
+    sweep it instead of letting them accumulate across restarts
+    (ADVICE r3)."""
+    from bigdata_riveranalysis_spark.streaming.sinks import (
+        read_serving_table,
+        start_upsert_sink,
+    )
 
     out = str(tmp_path / "serve")
     orphan = out + "__b999"
@@ -391,11 +304,11 @@ def test_upsert_sink_sweeps_orphan_shadow_dirs(spark, tmp_path):
                           trigger_available_now=True)
     assert q.awaitTermination(120), "streaming query timed out (partial sink)"
     assert not os.path.exists(orphan)
-    assert spark.read.parquet(out).count() == 1
+    assert read_serving_table(spark, out).count() == 1
 
 
 def test_upsert_sink_pointer_commit_keeps_latest_per_key(spark, tmp_path):
-    """Pointer-commit protocol (object-store-safe): after two
+    """Pointer commit (object-store-safe): after two
     micro-batches the pointer resolves to a generation dir holding ONE
     row per key with the folded aggregate, and earlier generations are
     swept by the following batch (at most live + previous on disk)."""
@@ -415,10 +328,10 @@ def test_upsert_sink_pointer_commit_keeps_latest_per_key(spark, tmp_path):
     )
     out, ckpt = str(tmp_path / "serve"), str(tmp_path / "ckpt_ptr")
     q = start_upsert_sink(agg, out, ckpt, ("user_id",),
-                          trigger_available_now=True, commit="pointer")
+                          trigger_available_now=True)
     assert q.awaitTermination(120), "streaming query timed out (partial sink)"
     assert os.path.exists(out + ".ptr")
-    assert not os.path.exists(out)  # no rename-mode dir in pointer mode
+    assert not os.path.exists(out)  # the table lives in generation dirs only
     live = resolve_serving_path(out)
     assert live is not None and "__b" in os.path.basename(live)
     rows = {r.user_id: r for r in read_serving_table(spark, out).collect()}
@@ -442,7 +355,7 @@ def test_upsert_sink_pointer_commit_survives_read_failure(spark, tmp_path):
     stream = file_json_stream(spark, src1, max_files_per_trigger=1)
     agg = stream.groupBy("user_id").agg(F.sum("value").alias("total"))
     q = start_upsert_sink(agg, out, str(tmp_path / "ckpt_p1"), ("user_id",),
-                          trigger_available_now=True, commit="pointer")
+                          trigger_available_now=True)
     assert q.awaitTermination(120), "streaming query timed out (partial sink)"
     live = resolve_serving_path(out)
 
@@ -459,7 +372,7 @@ def test_upsert_sink_pointer_commit_survives_read_failure(spark, tmp_path):
     stream2 = file_json_stream(spark, src2, max_files_per_trigger=1)
     agg2 = stream2.groupBy("user_id").agg(F.sum("value").alias("total"))
     q2 = start_upsert_sink(agg2, out, str(tmp_path / "ckpt_p2"), ("user_id",),
-                           trigger_available_now=True, commit="pointer")
+                           trigger_available_now=True)
     # match pins the INTENDED failure (merge-read of the corrupt
     # parquet), not any incidental setup error (review finding).
     with pytest.raises(Exception, match="(?i)parquet|footer|magic"):
@@ -496,7 +409,7 @@ def test_upsert_sink_pointer_crash_before_flip_keeps_old_live(spark, tmp_path):
     stream = file_json_stream(spark, src1, max_files_per_trigger=1)
     agg = stream.groupBy("user_id").agg(F.sum("value").alias("total"))
     q = start_upsert_sink(agg, out, str(tmp_path / "ckpt_cf"), ("user_id",),
-                          trigger_available_now=True, commit="pointer")
+                          trigger_available_now=True)
     assert q.awaitTermination(120), "streaming query timed out (partial sink)"
     rows = {r.user_id: r.total for r in read_serving_table(spark, out).collect()}
     assert rows == {1: 10.0, 2: 20.0}  # merged from __b7, not the orphan
@@ -530,37 +443,12 @@ def test_upsert_sink_pointer_retry_pingpong_never_overwrites_live(spark, tmp_pat
     stream = file_json_stream(spark, src1, max_files_per_trigger=1)
     agg = stream.groupBy("user_id").agg(F.sum("value").alias("total"))
     q = start_upsert_sink(agg, out, str(tmp_path / "ckpt_pp"), ("user_id",),
-                          trigger_available_now=True, commit="pointer")
+                          trigger_available_now=True)
     assert q.awaitTermination(120), "streaming query timed out (partial sink)"
     assert os.path.basename(resolve_serving_path(out)) == \
         os.path.basename(out) + "__b0x"
     rows = {r.user_id: r.total for r in read_serving_table(spark, out).collect()}
     assert rows == {1: 10.0}  # keyed merge converged, no double-count
-
-
-def test_upsert_sink_pointer_migrates_legacy_rename_table(spark, tmp_path):
-    """Switching a rename-committed serving table to pointer commit:
-    the first pointer batch merges against the legacy `path` dir, then
-    retires it so naive readers can't see stale data."""
-    from bigdata_riveranalysis_spark.streaming.sinks import (
-        read_serving_table,
-        start_upsert_sink,
-    )
-
-    out = str(tmp_path / "serve")
-    spark.createDataFrame([(1, 10.0)], "user_id bigint, total double") \
-        .write.parquet(out)  # legacy rename-committed table
-
-    b2 = [_ev(2, "2024-01-01 00:01:00", user_id=2, value=20.0)]
-    src2 = _write_files(tmp_path, [b2])
-    stream2 = file_json_stream(spark, src2, max_files_per_trigger=1)
-    agg2 = stream2.groupBy("user_id").agg(F.sum("value").alias("total"))
-    q2 = start_upsert_sink(agg2, out, str(tmp_path / "ckpt_mig"), ("user_id",),
-                           trigger_available_now=True, commit="pointer")
-    assert q2.awaitTermination(120), "streaming query timed out (partial sink)"
-    rows = {r.user_id: r.total for r in read_serving_table(spark, out).collect()}
-    assert rows == {1: 10.0, 2: 20.0}
-    assert not os.path.exists(out)  # legacy dir retired
 
 
 def test_observe_metrics_on_batch_query(spark):
@@ -637,30 +525,28 @@ def test_dedup_state_expires_past_watermark_horizon(spark, tmp_path):
     assert ids == [1, 1, 2, 3]  # exactly one extra 1: the fresh-ts redelivery
 
 
-def test_rocksdb_state_store_parity(spark, monkeypatch):
-    """The SPARK_GRAFT_STATE_STORE=rocksdb hook runs EVERY registered
-    stream query on the RocksDB provider and produces identical
-    results to the default HDFS-backed store (VERDICT r5 #6 config hook; the
-    measured trade lives in _run_stream's sizing note)."""
+def test_rocksdb_state_store_parity(spark):
+    """With Spark's provider conf set to RocksDB on the session, EVERY
+    registered stream query runs on the RocksDB state store and
+    produces identical results to the default HDFS-backed store
+    (VERDICT r5 item 6; the measured trade lives in _run_stream's note).
+    The drain must leave the session's provider choice alone."""
     from bigdata_riveranalysis_spark.plans.registry import REGISTRY
 
     from .conftest import SF_SMOKE
 
+    key = "spark.sql.streaming.stateStore.providerClass"
     names = [n for n in REGISTRY if n.startswith("stream_")]
     assert len(names) >= 7
     base = {n: sorted(map(tuple, REGISTRY[n].fn(spark, SF_SMOKE).collect())) for n in names}
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "rocksdb")
-    for n in names:
-        rocks = sorted(map(tuple, REGISTRY[n].fn(spark, SF_SMOKE).collect()))
-        assert rocks == base[n], f"{n}: provider changed the result"
-    assert (
-        spark.conf.get("spark.sql.streaming.stateStore.providerClass").endswith(
-            "RocksDBStateStoreProvider"
-        )
-    )
-    monkeypatch.setenv("SPARK_GRAFT_STATE_STORE", "not-a-provider")
-    with pytest.raises(ValueError, match="SPARK_GRAFT_STATE_STORE"):
-        REGISTRY[names[0]].fn(spark, SF_SMOKE)
+    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    try:
+        for n in names:
+            rocks = sorted(map(tuple, REGISTRY[n].fn(spark, SF_SMOKE).collect()))
+            assert rocks == base[n], f"{n}: provider changed the result"
+        assert spark.conf.get(key).endswith("RocksDBStateStoreProvider")
+    finally:
+        spark.conf.unset(key)
 
 
 def test_ewma_sorts_across_arrow_chunks(spark, tmp_path):
