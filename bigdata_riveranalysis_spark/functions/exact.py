@@ -190,10 +190,6 @@ def sum2to4_exact(col: Column | str) -> Column:
     return sum_round4(cents(col), 2)
 
 
-def sum2to4_exact_sql(expr: str) -> str:
-    return sum_round4_sql(cents_sql(expr), 2)
-
-
 def round_pz(col: Column, scale: int) -> Column:
     """round(col, scale) with the signed zero normalized to +0.0.
 

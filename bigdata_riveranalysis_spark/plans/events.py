@@ -19,7 +19,7 @@ from pyspark.sql import types as T
 
 from bigdata_riveranalysis_spark.functions import exact as EX
 from bigdata_riveranalysis_spark.plans import scale as SC
-from bigdata_riveranalysis_spark.plans.registry import query, retired_query
+from bigdata_riveranalysis_spark.plans.registry import query
 from bigdata_riveranalysis_spark.sources.tables import load_table
 
 #: Explicit schema for the ``props`` JSON payload — declared, not
@@ -123,13 +123,10 @@ def events_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``session_window``). Gap arithmetic is integer microseconds so
     the oracle comparison is exact.
 
-    r16 note: the interrupted build briefly moved this query to the
-    retired tier to fund stream_session_fold_ttl by displacement.
-    The optimization round's driver contract forbids removing a
+    The ``__spark_entry__.queries()`` contract forbids removing a
     declared query (a disappeared name is a regression regardless of
-    speed), so it is RE-REGISTERED unchanged; the registry sits at
-    the 150 cap with both sessionizers declared (ceil(150/50) = 3
-    keeps the staleness bound exact).
+    speed), so the registry sits at the 150 cap with both sessionizers
+    declared (ceil(150/50) = 3 keeps the staleness bound exact).
     """
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")

@@ -35,7 +35,7 @@ from bigdata_riveranalysis_spark.functions import exact as EX
 from bigdata_riveranalysis_spark.functions import text as TX
 from bigdata_riveranalysis_spark.functions import vectors as VX
 from bigdata_riveranalysis_spark.functions.arrays import explode_nonempty
-from bigdata_riveranalysis_spark.plans.registry import query, retired_query
+from bigdata_riveranalysis_spark.plans.registry import query
 from bigdata_riveranalysis_spark.sources.tables import (
     BATCH_CUTOFF_SQL,
     batch_cutoff,
@@ -211,28 +211,6 @@ def _minhash_signature_cte() -> str:
            {mh_cols}
         FROM based
     )"""
-
-
-@retired_query(
-    "minhash_signatures",
-    oracle=f"""
-    WITH {_minhash_signature_cte()}
-    SELECT * FROM sig
-    """,
-)
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash signatures (8 hashes, salted-md5 family, word trigrams).
-
-    Registered separately from the pair query so the oracle validates
-    every signature bit-for-bit even when the corpus has few
-    near-duplicates.
-
-    RETIRED r9 (registry at the 150-slot cadence cap; VERDICT r8 #5):
-    the verified surface is subsumed by dedup_minhash_lsh, whose
-    oracle joins these same signatures per-hash on both sides; still
-    oracle-verified every pytest run (tests/test_retired_queries.py).
-    """
-    return _minhash_signature_df(spark, sf_dir)
 
 
 def _minhash_sig_arr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1127,28 +1105,6 @@ def _simhash_sig_cte() -> str:
     sig AS (SELECT doc_id, CAST({bits} AS BIGINT) AS simhash FROM votes)"""
 
 
-@retired_query(
-    "simhash_signatures",
-    oracle=f"""
-    WITH {_simhash_sig_cte()}
-    SELECT doc_id, simhash FROM sig
-    """,
-)
-def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash signatures (60-bit, token-level, md5 bit votes).
-
-    All-integer arithmetic → bit-exact oracle. Scale: one pass whose
-    shuffle is n_docs × 21 longs after map-side combine
-    (_simhash_frame); agg-only, so the groupBy shuffle provides the
-    parallelism — no split-spread Exchange.
-
-    RETIRED r9 (150-slot cadence cap; VERDICT r8 #5): subsumed by
-    dedup_simhash, whose oracle recomputes these signatures on both
-    sides; pytest-verified via tests/test_retired_queries.py.
-    """
-    return _simhash_frame(load_table(spark, sf_dir, "documents"))
-
-
 @query(
     "dedup_simhash",
     oracle=f"""
@@ -1357,28 +1313,6 @@ def _simhash_pairs_local_tiled(spark: SparkSession, ids, h) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Similarity search over embeddings
 # ---------------------------------------------------------------------------
-
-
-@retired_query(
-    "embedding_norms",
-    oracle=f"""
-    SELECT vec_id, label,
-           round(sqrt({VX.dot_sql("embedding", "embedding")}), 6) AS l2_norm
-    FROM embeddings
-    """,
-)
-def embedding_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2 norms — the array-math primitive behind every similarity op.
-
-    Plain array<float> + higher-order functions; no VectorUDT, no
-    Python (SURVEY.md §7 watch-list #6).
-
-    RETIRED r9 (150-slot cadence cap; VERDICT r8 #5): the dot/norm
-    primitive is exercised by every registered knn/ann/cosine query;
-    pytest-verified via tests/test_retired_queries.py.
-    """
-    emb = _embs(spark, sf_dir)
-    return emb.select("vec_id", "label", F.round(VX.norm("embedding"), 6).alias("l2_norm"))
 
 
 @query(
@@ -2172,10 +2106,9 @@ def _ivf_probe(vecs: DataFrame, cent_arr: DataFrame, nprobe: int) -> DataFrame:
 
 def _ivf_oracle_ctes(nprobe: int, nquery: int) -> str:
     """The IVF coarse-quantizer pipeline as oracle CTE text — ONE
-    definition for every IVF oracle (ann_ivf_cells, the retired
-    ann_ivf_recall_nprobe2, ann_ivf_pq; review r11: the same SQL
-    existed three times and a tie-break fix to one copy would desync
-    the others' cell assignments): per-label dim-mean centroids,
+    definition for every IVF oracle (ann_ivf_cells, ann_ivf_pq; a
+    tie-break fix to one copy of the same SQL would desync the
+    other's cell assignments): per-label dim-mean centroids,
     cosine cell assignment for the corpus (``assign``: vec_id,
     embedding, cell), and the top-``nprobe`` probe list for the
     ``nquery`` query vectors (``qprobe``: qid, qe, cell)."""
@@ -2257,8 +2190,9 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a full corpus scan, and it IS the persisted IVF index in
     production. The search join shuffles on cell, the IVF invariant:
     each query compares against ~n/k candidates instead of n.
-    Recall < 1 by design at cell borders; ann_ivf_recall_nprobe2
-    measures it against exact KNN instead of implying it.
+    Recall < 1 by design at cell borders; ann_ivf_pq_recall
+    measures the cell-gated search against exact KNN instead of
+    implying it.
     """
     emb = _embs(spark, sf_dir)
     cent_arr = _ivf_cent_arr(spark, sf_dir)
@@ -2290,130 +2224,6 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
             # signed-zero normalization (EX.round_pz docstring)
             EX.round_pz(F.col("cos"), 6).alias("cosine"),
             "rnk",
-        )
-    )
-
-
-@retired_query(
-    # RETIRED r11: subsumed by ann_ivf_pq_recall — the same recall
-    # harness (nprobe=2 _ivf_probe, broadcast exact-KNN baseline,
-    # hits accounting) audits the COMPOSED IVF×PQ serving path, a
-    # strict superset of the IVF-only machinery this query exercises.
-    "ann_ivf_recall_nprobe2",
-    oracle=f"""
-    WITH {_ivf_oracle_ctes(2, 10)},
-    ivf_pairs AS (
-        SELECT q.qid, a.vec_id AS nid,
-               {VX.cosine_sql("q.qe", "a.embedding")} AS cos
-        FROM qprobe q JOIN assign a ON q.cell = a.cell AND a.vec_id <> q.qid
-    ),
-    ivf3 AS (
-        SELECT qid, nid
-        FROM (SELECT qid, nid, row_number() OVER (PARTITION BY qid
-                                                  ORDER BY cos DESC, nid) AS rnk
-              FROM ivf_pairs)
-        WHERE rnk <= 3
-    ),
-    exact_pairs AS (
-        SELECT q.vec_id AS qid, a.vec_id AS nid,
-               {VX.cosine_sql("q.embedding", "a.embedding")} AS cos
-        FROM embeddings q JOIN embeddings a
-          ON q.vec_id < 10 AND a.vec_id <> q.vec_id
-    ),
-    exact3 AS (
-        SELECT qid, nid
-        FROM (SELECT qid, nid, row_number() OVER (PARTITION BY qid
-                                                  ORDER BY cos DESC, nid) AS rnk
-              FROM exact_pairs)
-        WHERE rnk <= 3
-    ),
-    hits AS (
-        SELECT i.qid, count(*) AS n_hits
-        FROM ivf3 i JOIN exact3 e ON i.qid = e.qid AND i.nid = e.nid
-        GROUP BY i.qid
-    )
-    SELECT q.qid AS query_id,
-           CAST(2 AS INTEGER) AS n_probed_cells,
-           coalesce(h.n_hits, CAST(0 AS BIGINT)) AS n_hits,
-           round(coalesce(h.n_hits, 0) / 3.0, 6) AS recall_at_3
-    FROM (SELECT DISTINCT vec_id AS qid FROM embeddings WHERE vec_id < 10) q
-    LEFT JOIN hits h ON q.qid = h.qid
-    """,
-)
-def ann_ivf_recall_nprobe2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF recall accounting: search the top-2 cells per query
-    (nprobe=2) and report recall@3 against the EXACT cosine top-3 —
-    the ANN story states its recall instead of implying it.
-
-    Scale: the IVF side reuses the map-side quantizer (_ivf_assign /
-    _ivf_probe, zero-Exchange assignment) and the cell-join invariant
-    (~nprobe·n/k candidates per query). The exact side is the
-    evaluation harness, not the serving path: it brute-forces only
-    the 10-query SAMPLE against the corpus (broadcast queries, one
-    map-side pass + a top-k shuffle of sample×corpus scores) — the
-    standard way recall is audited at 100 TB, where exact search over
-    the full query log would be the thing ANN exists to avoid.
-
-    On the synthetic near-orthogonal test embeddings (max pairwise
-    cosine ≈ 0.5) the label-seeded cells are weakly informative, so
-    measured recall@3 sits around 0.3-0.7 — which is exactly the
-    point: the query AUDITS the recall/cost trade instead of
-    asserting it, and on clustered production embeddings the same
-    measurement governs the nprobe choice.
-    """
-    emb = _embs(spark, sf_dir)
-    cent_arr = _ivf_cent_arr(spark, sf_dir)
-    qvecs = emb.filter(F.col("vec_id") < 10)
-
-    assign = _ivf_assign(emb, cent_arr)
-    qprobe = _ivf_probe(qvecs, cent_arr, nprobe=2)
-    ivf_pairs = (
-        assign.join(F.broadcast(qprobe), ["cell"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            VX.cosine(F.col("qe"), F.col("embedding")).alias("cos"),
-        )
-    )
-    wq = W.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    ivf3 = (
-        ivf_pairs.withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    exact_pairs = (
-        emb.crossJoin(
-            F.broadcast(
-                qvecs.select(
-                    F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
-                )
-            )
-        )
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            VX.cosine(F.col("qe"), F.col("embedding")).alias("cos"),
-        )
-    )
-    exact3 = (
-        exact_pairs.withColumn("rnk", F.row_number().over(wq))
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    # sample×k rows on both sides — broadcast, never a sort-merge.
-    hits = ivf3.join(F.broadcast(exact3), ["query_id", "neighbor_id"]).groupBy(
-        "query_id"
-    ).agg(F.count("*").alias("n_hits"))
-    return (
-        qvecs.select(F.col("vec_id").alias("query_id"))
-        .join(F.broadcast(hits), ["query_id"], "left")
-        .select(
-            "query_id",
-            F.lit(2).cast("int").alias("n_probed_cells"),
-            F.coalesce(F.col("n_hits"), F.lit(0).cast("bigint")).alias("n_hits"),
-            F.round(F.coalesce(F.col("n_hits"), F.lit(0)) / 3.0, 6).alias("recall_at_3"),
         )
     )
 
@@ -2507,59 +2317,10 @@ def ngram_topk_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Histogram config for docs_length_histogram: NB equal-width buckets
-#: over [0, HIST_HI); the last bucket absorbs the overflow tail.
-HIST_NB = 10
-HIST_HI = 600
-
-
-@retired_query(
-    # RETIRED r11: subsumed by dq_drift_report, which computes the
-    # SAME integer-division length buckets over the same documents
-    # table (corpus side) plus the batch-vs-corpus drift witness —
-    # the standalone histogram adds no verified surface.
-    "docs_length_histogram",
-    oracle=f"""
-    SELECT least({HIST_NB - 1}, n_chars * {HIST_NB} // {HIST_HI}) AS bucket,
-           count(*)     AS n_docs,
-           min(n_chars) AS min_chars,
-           max(n_chars) AS max_chars
-    FROM documents
-    GROUP BY 1
-    """,
-)
-def docs_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal-width histogram of document lengths — the distribution
-    profile that picks the funnel's length thresholds (and the shape
-    check after every corpus refresh). {HIST_NB} buckets of
-    {HIST_HI // HIST_NB} chars over [0, {HIST_HI}); the top bucket
-    absorbs the tail, so no row is dropped.
-
-    Bucketing is INTEGER division (Spark `div` ≡ DuckDB `//`) — no
-    float edge where a boundary-length doc lands in different buckets
-    per engine (the width_bucket-style float formulation has exactly
-    that hazard at representable boundaries). Single scan, map-side
-    partial aggregation to ≤{HIST_NB} rows per task: histogramming is
-    the cheapest possible profile at any scale.
-    """
-    docs = load_table(spark, sf_dir, "documents")
-    bucket = F.least(
-        F.lit(HIST_NB - 1), F.expr(f"n_chars * {HIST_NB} div {HIST_HI}")
-    )
-    return docs.groupBy(bucket.alias("bucket")).agg(
-        F.count("*").alias("n_docs"),
-        F.min("n_chars").alias("min_chars"),
-        F.max("n_chars").alias("max_chars"),
-    )
-
-
-@retired_query(
-    # RETIRED r11: its oracle is textually embedded (_quant_oracle)
-    # in every PQ / k-means oracle, so each of those driver rows
-    # re-verifies the SQ8 quantization end-to-end; the standalone
-    # dump adds no verified surface beyond its registered consumers.
-    "embedding_quantize_int8",
-    oracle="""
+#: DuckDB twin of embedding_quantize_int8: the (vec_id, dim, code) SQ8
+#: codes. The k-means and PQ oracles embed it as a subquery, so every
+#: one of them re-verifies the quantization end to end.
+SQ8_CODES_SQL = """
     WITH ex AS (
         SELECT u.dim AS dim, u.v
         FROM embeddings,
@@ -2584,14 +2345,19 @@ def docs_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
          s,
          LATERAL (SELECT unnest(embedding) AS v,
                          generate_subscripts(embedding, 1) AS dim) u
-    """,
-)
+    """
+
+
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar (SQ8) quantization: per-dimension min/max calibration
     over the corpus, then each float32 component encoded as an 8-bit
     bucket — the 4× memory cut that lets an ANN index hold 4× the
     vectors per executor (the standard IVF+SQ8 layout; recall cost is
-    measured by the same harness as ann_ivf_recall_nprobe2).
+    measured by the ann_ivf_pq_recall harness).
+
+    Not registered: its codes feed kmeans_int8_lloyd2 and every PQ
+    query, whose oracles embed SQ8_CODES_SQL, and tests use it as
+    the reference SQ8 encoder.
 
     Determinism: min/max of floats are exact element picks (no sum
     drift), every arithmetic step is explicitly CAST to double so
@@ -2696,7 +2462,7 @@ def minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Estimator-accuracy audit for the MinHash pipeline: every LSH
     candidate pair's signature-agreement estimate next to the TRUE
     shingle-set Jaccard, with an integer-exact within-0.25 witness —
-    the same measured-accuracy discipline as ann_ivf_recall_nprobe2
+    the same measured-accuracy discipline as ann_ivf_pq_recall
     (state the estimator's error, don't imply it). 8-hash signatures
     have σ ≈ √(j(1−j)/8) ≤ 0.18, so |est − true| ≤ 0.25 holding on
     every pair is the expected regime, and a broken hash family or
@@ -3676,19 +3442,11 @@ def _kmeans_update(assign: DataFrame) -> DataFrame:
     return m.groupBy("cid", "dim").agg(F.expr("sum(c) div count(*)").alias("cent"))
 
 
-def _quant_oracle() -> str:
-    """The registered embedding_quantize_int8 oracle as a subquery —
-    k-means clusters the SAME codes, textually."""
-    from bigdata_riveranalysis_spark.plans.registry import REGISTRY, RETIRED
-
-    return (REGISTRY | RETIRED)["embedding_quantize_int8"].oracle
-
-
 @query(
     "kmeans_int8_lloyd2",
     oracle=f"""
     WITH codes AS (
-        SELECT vec_id, dim, code AS c FROM ({_quant_oracle()}) qz
+        SELECT vec_id, dim, code AS c FROM ({SQ8_CODES_SQL}) qz
     ),
     seed AS (
         SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cid
@@ -3743,10 +3501,10 @@ def kmeans_int8_lloyd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline shape — IVF coarse quantizers train on compressed codes
     precisely to keep memory linear.
 
-    Composition: codes come from embedding_quantize_int8 (called as a
-    plain function; the oracle embeds that query's registered SQL
-    textually). Init is deterministic: the KMEANS_K smallest
-    vec_ids seed the centroids.
+    Composition: codes come from the SQ8 encoder behind
+    embedding_quantize_int8; the oracle embeds its DuckDB twin,
+    SQ8_CODES_SQL, textually. Init is deterministic: the KMEANS_K
+    smallest vec_ids seed the centroids.
 
     Scale (r8 array-form rewrite): the quantize output is reshaped
     ONCE into per-vector code arrays (n rows; one n·d shuffle) and
@@ -3888,18 +3646,16 @@ def _pq_train_pred_sql() -> str:
 
 def _pq_train_ctes(train_pred: str = "TRUE") -> str:
     """The PQ codebook pipeline as oracle CTE text — ONE definition
-    shared by every PQ oracle (ann_pq_adc, its sampled-trainer
-    variant, ann_ivf_pq), parameterized by the training predicate:
+    shared by every PQ oracle (ann_pq_adc_sampled, ann_ivf_pq),
+    parameterized by the training predicate:
     ``codes`` is always the FULL corpus; only the Lloyd side (seeds,
     first assignment, centroid update) restricts to ``tr`` rows
     matching ``train_pred``. The final distances (``d2``), encodings
     (``enc``), and query LUT (``qd``) always cover the full corpus.
-    With the default TRUE this is textually-reorganized but
-    semantically identical to the original inline ann_pq_adc oracle
-    (r9), whose driver row is green.
+    The default TRUE trains on the whole corpus, as ann_pq_adc does.
     """
     return f"""codes AS (
-        SELECT vec_id, dim, code AS c FROM ({_quant_oracle()}) qz
+        SELECT vec_id, dim, code AS c FROM ({SQ8_CODES_SQL}) qz
     ),
     sc AS (
         SELECT vec_id, dim // {PQ_SUBDIM} AS sub, dim % {PQ_SUBDIM} AS sdim, c
@@ -4094,16 +3850,6 @@ def _pq_adc_lookups(enc: DataFrame, qd: DataFrame) -> DataFrame:
     )
 
 
-@retired_query(
-    # RETIRED r11: the whole-corpus-trained ADC search is covered by
-    # its two registered siblings built from the SAME helpers —
-    # ann_ivf_pq (full-corpus codebook + ADC, cell-gated) and
-    # ann_pq_adc_sampled (identical ungated search, sampled trainer).
-    "ann_pq_adc",
-    oracle=f"""
-    WITH {_pq_train_ctes()}{_PQ_ADC_TAIL}
-    """,
-)
 def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN with asymmetric distance computation
     — the third leg of the similarity-search stack (brute-force =
@@ -4135,6 +3881,10 @@ def ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant trains over the full corpus (the strongest checkable
     setting at test SF); ann_pq_adc_sampled is the production-trainer
     twin, and ann_ivf_pq composes these codes with IVF cell gating.
+
+    Not registered: ann_pq_adc_sampled and ann_ivf_pq run every helper
+    it calls under the oracle; tests keep it as the whole-corpus,
+    ungated reference search.
     """
     Xs = _pq_codes_xs(spark, sf_dir)
     cents1_row, enc = _pq_index(spark, sf_dir)
@@ -4259,8 +4009,8 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_oracle() -> str:
     """The registered ann_ivf_pq oracle as a subquery — the recall
-    audit scores the SAME search, textually (the _quant_oracle
-    pattern)."""
+    audit scores the SAME search, textually (as the k-means and PQ
+    oracles embed SQ8_CODES_SQL)."""
     from bigdata_riveranalysis_spark.plans.registry import REGISTRY
 
     return REGISTRY["ann_ivf_pq"].oracle
@@ -4302,9 +4052,8 @@ def _ivfpq_oracle() -> str:
 def ann_ivf_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall witness for the composed IVF×PQ search: its top-PQ_TOPK
     per query (by ADC estimate, within nprobe cells) scored against
-    the EXACT cosine top-PQ_TOPK over the whole corpus — the
-    ann_ivf_recall_nprobe2 discipline applied to the composition, so
-    the two approximation sources (cell gating AND code compression)
+    the EXACT cosine top-PQ_TOPK over the whole corpus, so the two
+    approximation sources (cell gating AND code compression)
     are audited together, which is the number a deployment actually
     tunes nprobe/M/K against.
 

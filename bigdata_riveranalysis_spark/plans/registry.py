@@ -4,7 +4,9 @@ Every operator the engine claims (SURVEY.md §2) is declared exactly
 once as a named :class:`Query`: a Spark plan-builder plus (where
 SQL-expressible) an equivalent ANSI-SQL oracle that DuckDB runs over
 the same parquet tables. ``__spark_entry__.py`` re-exports the
-registry to the correctness harness.
+registry to the correctness harness. There is one tier: a query is
+registered here or it is not a query. A plan function left outside
+the registry is a helper or a reference that tests compare against.
 
 Conventions that make the differential hash comparison exact:
   * every computed column is aliased identically in Spark and SQL;
@@ -33,19 +35,11 @@ class Query:
     doc: str
 
 
+#: The one query tier. The external correctness harness verifies 50
+#: queries a round on a 3-round cadence, so the registry is capped at
+#: 150 (SURVEY §5 #7): a new operator displaces a query whose surface
+#: a registered sibling already checks.
 REGISTRY: dict[str, Query] = {}
-
-#: Retired queries — the registry CAPACITY policy (SURVEY §5 #7):
-#: the driver verifies 50 queries/round and the enforced cadence is
-#: 3 rounds, so the registry is hard-capped at 150. At the cap, new
-#: operators displace REDUNDANT demos — queries whose verified
-#: surface is subsumed by a registered sibling (e.g. a signatures
-#: dump subsumed by the dedup query that joins those signatures).
-#: Retired queries keep their Spark plan AND DuckDB oracle and stay
-#: CONTINUOUSLY oracle-verified by tests/test_retired_queries.py
-#: every pytest run — they lose only the per-round external-driver
-#: slot. Reinstating one is a one-word decorator change.
-RETIRED: dict[str, Query] = {}
 
 
 def query(name: str, oracle: str | None = None) -> Callable[[SparkQueryFn], SparkQueryFn]:
@@ -57,32 +51,12 @@ def query(name: str, oracle: str | None = None) -> Callable[[SparkQueryFn], Spar
     """
 
     def wrap(fn: SparkQueryFn) -> SparkQueryFn:
-        if name in REGISTRY or name in RETIRED:
+        if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
         REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=(fn.__doc__ or "").strip())
         return fn
 
     return wrap
-
-
-def retired_query(name: str, oracle: str | None = None) -> Callable[[SparkQueryFn], SparkQueryFn]:
-    """Decorator twin of :func:`query` for the RETIRED tier — same
-    record, same oracle contract, pytest-verified instead of
-    driver-verified (see RETIRED)."""
-
-    def wrap(fn: SparkQueryFn) -> SparkQueryFn:
-        if name in REGISTRY or name in RETIRED:
-            raise ValueError(f"duplicate query name {name!r}")
-        RETIRED[name] = Query(name=name, fn=fn, oracle=oracle, doc=(fn.__doc__ or "").strip())
-        return fn
-
-    return wrap
-
-
-def lookup(name: str) -> Query:
-    """A query by name from either tier (tests that exercise retired
-    queries use this instead of REGISTRY[...])."""
-    return REGISTRY.get(name) or RETIRED[name]
 
 
 def query_catalog() -> dict[str, SparkQueryFn]:

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from bigdata_riveranalysis_spark.functions import exact as EX
 from bigdata_riveranalysis_spark.plans import scale as SC
-from bigdata_riveranalysis_spark.plans.registry import query, retired_query
+from bigdata_riveranalysis_spark.plans.registry import query
 from bigdata_riveranalysis_spark.sources.tables import load_table
 
 
@@ -621,48 +621,6 @@ def window_rank_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@retired_query(
-    "scalar_array_functions",
-    oracle="""
-    SELECT p_partkey,
-           len(parts)                                     AS n_parts,
-           list_sort(list_distinct(parts))[1]             AS first_tok,
-           array_to_string(list_reverse_sort(parts), '-') AS rev_joined,
-           list_contains(parts, 'widget')                 AS has_widget,
-           round(list_sum(list_transform(parts, t -> length(t))) * 1.0
-                 / len(parts), 4)                         AS avg_tok_len
-    FROM (SELECT p_partkey,
-                 regexp_split_to_array(trim(p_name), '\\s+') AS parts
-          FROM part)
-    """,
-)
-def scalar_array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array-function battery (size / array_distinct / array_sort /
-    sort desc + join / array_contains / transform + aggregate) — the
-    higher-order-function surface the LLM-data operators build on,
-    exercised standalone. All codegen'd JVM expressions; the per-row
-    array work is embarrassingly parallel at any scale.
-
-    RETIRED r9 (150-slot cadence cap; VERDICT r8 #5 policy) to make
-    room for ann_pq_adc: every registered embedding/ANN query runs
-    this higher-order surface (zip_with/aggregate/transform) on its
-    hot path, and the battery stays pytest-verified via
-    tests/test_retired_queries.py."""
-    part = load_table(spark, sf_dir, "part")
-    parts = F.split(F.trim(F.col("p_name")), r"\s+")
-    tok_lens = F.transform(parts, lambda t: F.length(t))
-    return part.select(
-        "p_partkey",
-        F.size(parts).alias("n_parts"),
-        F.array_sort(F.array_distinct(parts))[0].alias("first_tok"),
-        F.concat_ws("-", F.reverse(F.array_sort(parts))).alias("rev_joined"),
-        F.array_contains(parts, "widget").alias("has_widget"),
-        F.round(
-            F.aggregate(tok_lens, F.lit(0), lambda a, x: a + x) / F.size(parts), 4
-        ).alias("avg_tok_len"),
-    )
-
-
 #: map_functions_battery: a month is "busy" for a (priority, year)
 #: when it booked more than this many orders. Scale-free correctness
 #: knob — any value exercises map_filter; 40 splits the sf0.01 cells
@@ -791,28 +749,6 @@ def setop_nations_cust_and_supp(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cust.intersect(supp)
 
 
-@retired_query(
-    "setop_nations_cust_only",
-    oracle="""
-    SELECT c_nationkey AS nationkey FROM customer
-    EXCEPT
-    SELECT s_nationkey AS nationkey FROM supplier
-    """,
-)
-def setop_nations_cust_only(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXCEPT: nations with customers but no suppliers.
-
-    RETIRED r9 (150-slot cadence cap; VERDICT r8 #5): the set-op
-    family stays driver-checked by setop_nations_cust_and_supp
-    (INTERSECT) and setop_union_all_keys (UNION ALL distinct-count);
-    EXCEPT is pytest-verified via tests/test_retired_queries.py."""
-    cust = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    supp = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    # subtract == EXCEPT DISTINCT (set semantics); exceptAll would be
-    # bag semantics and diverge from the SQL oracle.
-    return cust.subtract(supp)
-
-
 @query(
     "setop_union_all_keys",
     oracle="""
@@ -848,9 +784,8 @@ def setop_union_all_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     the genuine ``subtract`` operator), and EXCEPT ALL (bag semantics
     — each nation's surplus of customer rows over supplier rows, the
     genuine ``exceptAll`` operator). Folding all three into one
-    driver row restores a driver-checked EXCEPT without spending a
-    registry slot (VERDICT r9/r10 task #5; EXCEPT had been
-    pytest-tier-only since setop_nations_cust_only retired in r9).
+    registered query gives EXCEPT an oracle-checked result without
+    spending a registry slot.
 
     The operators are the REAL set-op plan nodes, not agg rewrites —
     the point is exercising Spark's EXCEPT [ALL] execution: subtract
@@ -1765,7 +1700,7 @@ def orders_price_equidepth(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal ROW counts (± 1), with each bucket's realized [lo, hi]
     boundary and exact mean — the quantile-binning primitive behind
     optimizer statistics, drift baselines, and stratified designs,
-    and the complement of docs_length_histogram's equal-WIDTH bins
+    and the complement of dq_drift_report's equal-WIDTH length bins
     (skew-robust where fixed-width bins collapse into one hot
     bucket).
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from bigdata_riveranalysis_spark.plans.registry import query, retired_query
+from bigdata_riveranalysis_spark.plans.registry import query
 from bigdata_riveranalysis_spark.sources.tables import TABLES, load_table
 
 
@@ -64,40 +64,3 @@ def sql_q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     register_views(spark, sf_dir)
     return spark.sql(_Q10_SQL)
 
-
-_ROLLING_SQL_SPARK = """
-    SELECT user_id   AS sensor_id,
-           date_format(ts, 'yyyy-MM-dd HH:mm:ss') AS ts,
-           round(avg(value) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS rolling_avg
-    FROM events
-    WHERE user_id < 20
-"""
-
-
-@retired_query(
-    "sql_rolling_sensor_avg",
-    oracle="""
-    SELECT user_id   AS sensor_id,
-           strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts,
-           round(avg(value) OVER (
-               PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN 3 PRECEDING AND CURRENT ROW), 4) AS rolling_avg
-    FROM events
-    WHERE user_id < 20
-    """,
-)
-def sql_rolling_sensor_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed rolling average written in SQL (the dashboard query a
-    reference user would type). Only the timestamp formatter differs
-    between the engine and oracle strings (date_format vs strftime —
-    both truncate to whole seconds); everything else is shared ANSI.
-
-    RETIRED r9 (150-slot cadence cap; VERDICT r8 #5): the SQL entry
-    point stays driver-proved by sql_q10_returned_revenue and the
-    rolling-window semantics by sensor_rolling_avg /
-    events_rolling_1h_range; pytest-verified via
-    tests/test_retired_queries.py."""
-    register_views(spark, sf_dir)
-    return spark.sql(_ROLLING_SQL_SPARK)

@@ -695,9 +695,10 @@ def sample_stratified_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Batch-vs-corpus distribution drift
 # ---------------------------------------------------------------------------
 
-#: Drift histogram config (mirrors docs_length_histogram's buckets) and
-#: the per-bucket share tolerance (±10 percentage-point-equivalents on
-#: the relative share, integer cross-multiplied).
+#: Drift histogram config (NB equal-width integer-division buckets of
+#: n_chars over [0, HI), the last absorbing the tail) and the
+#: per-bucket share tolerance (±10 percentage-point-equivalents on the
+#: relative share, integer cross-multiplied).
 DRIFT_NB = 10
 DRIFT_HI = 600
 
@@ -734,7 +735,9 @@ def dq_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket, with a share-drift witness — the check that catches a
     crawler change (truncation bug, new boilerplate, encoding shift)
     BEFORE the batch pollutes the corpus. Same batch cutoff as
-    dedup_incremental_exact; same buckets as docs_length_histogram.
+    dedup_incremental_exact; equal-width length buckets by integer
+    division (Spark `div` ≡ DuckDB `//`), so a boundary-length
+    document lands in the same bucket in both engines.
 
     The witness |batch_share − corpus_share| ≤ 0.1 is evaluated as
     |b·Ct − c·Bt|·10 ≤ Ct·Bt — pure integer cross-multiplication over

@@ -143,7 +143,11 @@ def test_kafka_wire_contract_matches_reference_producer(spark):
 
 def test_parse_preserves_real_values(parsed_readings):
     """Spot-check the typed parse against the raw file's first data row
-    (reference kafka/sorted_water_quality.csv:2)."""
+    (reference kafka/sorted_water_quality.csv:2), and pin the output to
+    the canonical typed reading schema (FIXTURES.md §3)."""
+    from bigdata_riveranalysis_spark.operators.river_pipeline import READING_SCHEMA
+
+    assert parsed_readings.schema == READING_SCHEMA
     rows = parsed_readings.filter(
         "sensor_id = 'CARRIGAHORIG STREAM_010' AND timestamp = TIMESTAMP '2007-01-01 00:00:00'"
     ).collect()

@@ -1,8 +1,9 @@
 """Product-quantization ANN (ann_pq_adc) — planted-geometry checks.
 
-The registered oracle is the primary gate (integer-exact end-to-end);
-these tests pin the geometric invariants a differential hash can't
-name: identical vectors encode identically, and ADC distance between
+The registered PQ oracles (ann_pq_adc_sampled, ann_ivf_pq) are the
+primary gate (integer-exact end-to-end); these tests pin the
+geometric invariants a differential hash can't name: identical
+vectors encode identically, and ADC distance between
 identically-encoded vectors is exactly zero.
 """
 
@@ -16,8 +17,9 @@ from bigdata_riveranalysis_spark.plans.llmdata import (
     PQ_K,
     PQ_NQUERY,
     PQ_SUBDIM,
+    ann_pq_adc,
 )
-from bigdata_riveranalysis_spark.plans.registry import REGISTRY, RETIRED
+from bigdata_riveranalysis_spark.plans.registry import REGISTRY
 
 _DIM = 64
 _M = _DIM // PQ_SUBDIM
@@ -53,7 +55,7 @@ def test_pq_identical_twin_ranks_first(spark, tmp_path):
     query's codes and every other code is at least as far from the
     query by the argmin that chose those codes."""
     d = _planted_embeddings(tmp_path)
-    rows = (REGISTRY | RETIRED)["ann_pq_adc"].fn(spark, d).collect()
+    rows = ann_pq_adc(spark, d).collect()
     out = {(r.query_id, r.neighbor_id): r for r in rows}
     assert all(r.adc_dist2 >= 0 for r in rows)
     for q in range(PQ_NQUERY):
@@ -142,7 +144,7 @@ def test_ivf_pq_common_pairs_match_full_adc(spark, tmp_path):
     }
     full = {
         (r.query_id, r.neighbor_id): r.adc_dist2
-        for r in (REGISTRY | RETIRED)["ann_pq_adc"].fn(spark, d).collect()
+        for r in ann_pq_adc(spark, d).collect()
     }
     common = set(ivf) & set(full)
     assert common  # twins guarantee overlap
@@ -176,7 +178,7 @@ def test_pq_sampled_trainer_deterministic_same_shape(spark, tmp_path):
     assert a == b and len(a) > 0
     assert (
         df_a.schema.simpleString()
-        == (REGISTRY | RETIRED)["ann_pq_adc"].fn(spark, d).schema.simpleString()
+        == ann_pq_adc(spark, d).schema.simpleString()
     )
 
 

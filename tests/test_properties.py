@@ -464,14 +464,9 @@ def test_short_doc_guards_match_oracle(spark, tmp_path):
     con = duckdb.connect()
     con.execute(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
     for name in ("text_repetition_stats", "dedup_ngram_jaccard",
-                 "minhash_signatures", "dedup_incremental_minhash",
-                 "minhash_estimate_error", "ngram_topk_corpus",
-                 "docs_quality_funnel", "docs_length_histogram"):
-        # lookup, not REGISTRY[...]: minhash_signatures is retired
-        # (r9 cap policy) but keeps this planted-corpus check too.
-        from bigdata_riveranalysis_spark.plans.registry import lookup
-
-        q = lookup(name)
+                 "dedup_incremental_minhash", "minhash_estimate_error",
+                 "ngram_topk_corpus", "docs_quality_funnel"):
+        q = REGISTRY[name]
         sdf = q.fn(spark, str(tmp_path))
         s_cols = list(sdf.columns)
         s_rows = [tuple(r) for r in sdf.collect()]

@@ -390,14 +390,13 @@ def test_basket_graph_memoizes_pair_counts(spark):
 
 
 def test_registry_keys_match_function_names():
-    """Every registered/retired entry's key equals its function's
+    """Every registered entry's key equals its function's
     __name__ — pins the decorator-capture failure class: a helper def
     inserted between @query(...) and its intended function silently
     registers the HELPER under the query's name (caught live in r13
     when _minhash_sig_arr briefly became 'dedup_minhash_lsh'; the
     differential caught it, this catches it in milliseconds)."""
-    from bigdata_riveranalysis_spark.plans.registry import REGISTRY, RETIRED
+    from bigdata_riveranalysis_spark.plans.registry import REGISTRY
 
-    for table in (REGISTRY, RETIRED):
-        for name, q in table.items():
-            assert q.fn.__name__ == name, (name, q.fn.__name__)
+    for name, q in REGISTRY.items():
+        assert q.fn.__name__ == name, (name, q.fn.__name__)

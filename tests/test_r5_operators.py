@@ -11,7 +11,8 @@ from __future__ import annotations
 
 import pandas as pd
 
-from bigdata_riveranalysis_spark.plans.registry import REGISTRY, RETIRED
+from bigdata_riveranalysis_spark.plans.llmdata import embedding_quantize_int8
+from bigdata_riveranalysis_spark.plans.registry import REGISTRY
 
 
 def _write_events(tmp_path, rows):
@@ -221,7 +222,7 @@ def test_quantizer_constant_dimension_and_range(spark, tmp_path):
     )
     pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
     out: dict[int, dict[int, int]] = {}
-    rows = (REGISTRY | RETIRED)["embedding_quantize_int8"].fn(spark, str(tmp_path)).collect()
+    rows = embedding_quantize_int8(spark, str(tmp_path)).collect()
     for r in rows:
         out.setdefault(r.vec_id, {})[r.dim] = r.code
     assert out == {

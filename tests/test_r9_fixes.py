@@ -25,15 +25,9 @@ import pytest
 from pyspark.sql import functions as F  # noqa: F401
 from pyspark.sql import types as T
 
-from bigdata_riveranalysis_spark.plans.registry import REGISTRY, RETIRED
+from bigdata_riveranalysis_spark.plans.registry import REGISTRY
 
 from .conftest import SF_SMOKE
-
-#: Both tiers: retired queries are held to the same dtype-family rule
-#: — they are still differentially verified (test_retired_queries)
-#: and a family mismatch would blind that check the same way it blinded
-#: the driver gate (review r9 second pass).
-_ALL_QUERIES = {**REGISTRY, **RETIRED}
 
 
 def test_no_oracle_emits_hugeint_or_decimal_columns(duck):
@@ -46,7 +40,7 @@ def test_no_oracle_emits_hugeint_or_decimal_columns(duck):
     'wide decimal sums' policy makes a CAST(... AS DECIMAL(38,0))
     final the most likely future recurrence of the class."""
     offenders = {}
-    for name, q in _ALL_QUERIES.items():
+    for name, q in REGISTRY.items():
         if q.oracle is None:
             continue
         desc = duck.execute(f"DESCRIBE {q.oracle}").fetchall()
@@ -73,7 +67,7 @@ def test_no_query_emits_decimal_columns(spark):
     streaming DECIMAL final invisible to pytest, backstopped only by
     the manually-run strictcheck)."""
     offenders = {}
-    for name, q in _ALL_QUERIES.items():
+    for name, q in REGISTRY.items():
         schema = q.fn(spark, SF_SMOKE).schema
         bad = [f.name for f in schema.fields
                if isinstance(f.dataType, T.DecimalType)]

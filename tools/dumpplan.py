@@ -46,14 +46,14 @@ def main() -> int:
         return 2
     tag, names = args[0], args[1:]
 
-    from bigdata_riveranalysis_spark.plans.registry import lookup
+    from bigdata_riveranalysis_spark.plans.registry import REGISTRY
     from bigdata_riveranalysis_spark.session import get_spark
 
     spark = get_spark("dumpplan")
     outdir = os.path.join(_REPO, "plans", round_dir)
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        q = lookup(name)
+        q = REGISTRY[name]
         spark.sparkContext.setJobDescription(f"dumpplan:{name}")
         df = q.fn(spark, sf_dir)
         formatted = df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]

@@ -92,7 +92,6 @@ def audit_plan(plan: str) -> dict:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     from bigdata_riveranalysis_spark.plans import REGISTRY
-    from bigdata_riveranalysis_spark.plans.registry import RETIRED
     from bigdata_riveranalysis_spark.session import get_spark
 
     spark = get_spark("planaudit")
@@ -118,8 +117,7 @@ def main() -> int:
         "|---|---|---|---|---|---|---|",
     ]
     offenders = []
-
-    def _audit_row(name: str, q) -> None:
+    for name, q in REGISTRY.items():
         try:
             df = q.fn(spark, sf_dir)
             # Execute the DataFrame's OWN QueryExecution (collect, not a
@@ -136,7 +134,7 @@ def main() -> int:
         except Exception as e:  # noqa: BLE001
             lines.append(f"| {name} | ERROR: {str(e)[:60]} | | | | | |")
             offenders.append(name)
-            return
+            continue
         a = audit_plan(final)
         if a["row_python"]:
             offenders.append(name)
@@ -146,24 +144,9 @@ def main() -> int:
             f"| {a['arrow_python'] or '—'} | {a['global_window'] or '—'} |"
         )
 
-    for name, q in REGISTRY.items():
-        _audit_row(name, q)
-    # The RETIRED tier ships as callable package code and stays
-    # pytest-oracle-verified, so the BatchEvalPython gate covers it
-    # too (VERDICT r9/r10 task #7) — same audit, its own section.
-    lines += [
-        "",
-        "## Retired tier (pytest-verified; same plan gates apply)",
-        "",
-        "| query | exchanges | joins | pushdown | codegen | arrow-python | global-window |",
-        "|---|---|---|---|---|---|---|",
-    ]
-    for name, q in RETIRED.items():
-        _audit_row(name, q)
-
     with open(os.path.join(_REPO, "PLANS.md"), "w") as f:  # cwd-independent
         f.write("\n".join(lines) + "\n" + MEASURED_NOTES + _quiet_band_section())
-    print(f"wrote PLANS.md ({len(REGISTRY)} registered + {len(RETIRED)} retired queries)")
+    print(f"wrote PLANS.md ({len(REGISTRY)} registered queries)")
     if offenders:
         print(f"FAIL: row-at-a-time Python or plan error in: {offenders}")
         return 1
