@@ -249,7 +249,6 @@ def main() -> None:
                     "errors": errors,
                     "requalified": requalified,
                     "noise": noise,
-                    "long_sums_ab": os.environ.get("SPARK_GRAFT_LONG_SUMS") == "1",
                     "sf": sf_val,
                 }
             )

@@ -19,15 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from bigdata_riveranalysis_spark.plans.registry import query
-from bigdata_riveranalysis_spark.sources.tables import TABLES, load_table
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a (replaceable) temp view so
-    ad-hoc ``spark.sql`` works against the same loaders (and the same
-    TIMESTAMP(NANOS) handling) as the DataFrame API."""
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
+from bigdata_riveranalysis_spark.sources.tables import register_views
 
 
 # revenue via the exact fixed-point formulation (functions.exact):
@@ -61,6 +53,6 @@ def sql_q10_returned_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast nation dim, pushed 'R' filter, SMJ fact⋈fact);
     deterministic top-k via the unique trailing key (watch-list #4).
     """
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, "customer", "orders", "lineitem", "nation")
     return spark.sql(_Q10_SQL)
 

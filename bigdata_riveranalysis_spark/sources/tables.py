@@ -6,18 +6,31 @@ source is a parquet scan — columnar, predicate-pushdown- and
 column-pruning-capable — of the tables documented in TESTDATA.md /
 FIXTURES.md §4-5.
 
-Nothing here caches or collects: loaders return lazy DataFrames so
-Catalyst sees the whole plan (scan + downstream filter/project fuse
-into one stage, and only referenced columns are read).
+Nothing here collects: loaders return lazy DataFrames so Catalyst
+sees the whole plan (scan + downstream filter/project fuse into one
+stage, and only referenced columns are read). What is cached is
+metadata, never data, and every cache is keyed on the table's file
+signature (each file's name, mtime and size), so a table rewritten in
+place is read afresh:
+
+- footer facts read with pyarrow (row count, bytes, column max and
+  bytes, nanos-unit columns), keyed on (path, signature);
+- the Spark schema of each table, keyed on (path, signature, the
+  session confs that steer parquet schema conversion). Inferring it
+  runs a one-task Spark job; the first load of a table pays that and
+  every later load hands the recorded schema to the reader.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+from collections import OrderedDict
 from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from bigdata_riveranalysis_spark import sizing
 
@@ -40,16 +53,24 @@ DIM_TABLES = frozenset({"region", "nation", "supplier"})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Lazy parquet scan of one table from a scale-factor directory."""
+    """Lazy parquet scan of one table from a scale-factor directory.
+
+    The first load of a table (per file signature and schema confs)
+    lets Spark infer its schema, which runs a one-task job; later loads
+    read with the recorded schema and run none. Every load returns a
+    fresh relation, and the nanos guards and the UTC pin run on every
+    load, hit or miss."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
+    path = f"{sf_dir}/{name}.parquet"
+    sig = _files_sig(path)
     # ONE footer sniff serves both nanos guards below (review r9
     # second pass: two hand-maintained sniff+raise sites drift). It
     # runs BEFORE any conf flip so a rejected load leaves a
     # caller-provided session untouched — flipping nanosAsLong and
     # then raising would still poison later raw reads of foreign
     # nanos files in that session.
-    nanos_cols = _nanos_ts_cols(f"{sf_dir}/{name}.parquet")
+    nanos_cols = _nanos_ts_cols(path, sig)
     if name == "events" and [c for c in nanos_cols if c != "ts"]:
         # Only ``ts`` has the truncation treatment; any OTHER nanos
         # column would be returned as a raw long under the legacy
@@ -78,7 +99,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # (ADVICE r9: the set used to precede the sniff, contradicting the
     # no-conf-flip-before-reject comment).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events" and events_ts_is_nanos(f"{sf_dir}/{name}.parquet"):
+    if name == "events" and _events_ts_is_nanos(path, sig):
         # events.ts as parquet TIMESTAMP(NANOS) (seen in some fixture
         # generations, FIXTURES.md §4) is rejected by Spark's
         # vectorized reader outright. Read nanos as long and truncate
@@ -101,15 +122,52 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # table); callers mixing in raw spark.read.parquet of foreign
         # nanos files should read them first or in another session.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, path, sig)
         return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = _read_parquet(spark, path, sig)
     if name == "events":
         # Micros-unit generation: parquet TIMESTAMP(MICROS, ntz) reads
         # as TIMESTAMP_NTZ; cast to the session-zone TIMESTAMP type so
         # downstream plans and the (UTC) oracle comparison see the
         # same type either way.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+#: Session confs that steer Spark's parquet-to-Spark schema conversion.
+#: A schema inferred under one set of their values is wrong under
+#: another, so their values are part of the schema memo's key.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+_SCHEMA_MEMO_SIZE = 64
+#: (path, files signature, conf values) -> inferred schema, least
+#: recently used first. Holds plain StructTypes, no session.
+_SCHEMAS: OrderedDict[tuple, StructType] = OrderedDict()
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def _read_parquet(spark: SparkSession, path: str, files_sig: int) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema only on the
+    first read of these files under these schema confs. Inference runs
+    a Spark job (mergeSchemasInParallel) even for a one-file table; a
+    supplied schema skips it and yields the same relation."""
+    key = (path, files_sig, tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS))
+    with _SCHEMAS_LOCK:
+        schema = _SCHEMAS.get(key)
+        if schema is not None:
+            _SCHEMAS.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _SCHEMAS_LOCK:
+        _SCHEMAS[key] = df.schema
+        while len(_SCHEMAS) > _SCHEMA_MEMO_SIZE:
+            _SCHEMAS.popitem(last=False)
     return df
 
 
@@ -142,18 +200,13 @@ def _events_ts_is_nanos(path: str, files_sig: int) -> bool:
     return units == {"ns"}
 
 
-def _nanos_ts_cols(path: str) -> tuple[str, ...]:
-    """Names of TIMESTAMP(NANOS) columns in a non-events table's
-    footer (cached on the file signature, like every footer sniff
-    here). Non-empty means load_table must refuse: the session-wide
-    nanosAsLong pin would otherwise hand downstream plans raw longs
-    where they expect timestamps (ADVICE r8 #3)."""
-    sig = _files_sig(path)
-    return _nanos_ts_cols_cached(path, sig)
-
-
 @lru_cache(maxsize=64)
-def _nanos_ts_cols_cached(path: str, files_sig: int) -> tuple[str, ...]:
+def _nanos_ts_cols(path: str, files_sig: int) -> tuple[str, ...]:
+    """Names of TIMESTAMP(NANOS) columns in a table's footer (cached
+    on the file signature, like every footer sniff here). Non-empty
+    means load_table must refuse, except for events' ``ts``: the
+    session-wide nanosAsLong pin would otherwise hand downstream plans
+    raw longs where they expect timestamps (ADVICE r8 #3)."""
     import pyarrow.parquet as pq
 
     cols: set[str] = set()
